@@ -244,10 +244,75 @@ object AnnPack extends QueryPack {
     * The pair plan is persisted so D3 and C5 (identical subplan, by
     * Spark's CacheManager) compute it once per session.
     */
-  /** The scale knobs, derived from data and turnable per job
-    * ([[graft.GraftConf]] — `spark.graft.ann.targetCellSize` /
-    * `spark.graft.ann.maxCells`; the r11 verdict's "a knob you must
-    * recompile to turn is not a knob"). The cell structure is
+  /** Cell and band geometry of the two range engines. Every in-query
+    * row runs at the defaults (the audited values every gate and scale
+    * row ran at, which the static DuckDB oracles mirror);
+    * [[graft.sources.EmbedStore.write]] takes one as an argument and
+    * FREEZES it into the store, so a store is written, appended to,
+    * rebuilt and probed under one geometry whatever the session says.
+    *
+    * Cell fields ([[cellIndexOf]]): per-group cell count is
+    * ceil(|group| / cellSize) clamped to [2, maxCells] per hierarchy
+    * level (the two-level structure is documented below).
+    * `orphanMaxFrac` is the PER-LABEL refinement trigger of the leaf
+    * build: past this round-1 orphan fraction a label's block is a
+    * similarity CONTINUUM and keeps the one-round structure (measured
+    * on sf0.1 media vectors: frac 0.96, −3.4% candidate mass for ~3×
+    * build wall on the band; −22% mass on the 8× hierarchical media
+    * sweep); below it a minority of far members marks orphaned natural
+    * clusters and the full leaf refinement runs (planted 30-member
+    * clusters: frac 0.61, 15× mass reduction). 0.8 sits between the
+    * two measured regimes; recall is 1 on every branch — the trigger
+    * trades build passes against candidate mass, never correctness.
+    * The same number freezes the store's per-label `cont` routing
+    * flag, so a store written at -1 routes every label banded.
+    *
+    * Band fields ([[bandedRangeCandidatesOf]], the store's banded
+    * leg): `bands` independent bands, each keyed by the first `bits`
+    * sign bits of its `maxBits`-bit plane block, where `bits` is the
+    * smallest b with targetLoad·2^b ≥ n (clamped to [4, maxBits]); the
+    * plane count derives as bands × maxBits. Past
+    * n ≈ targetLoad·2^maxBits (~262k at the defaults) per label `bits`
+    * clamps, bucket load grows linearly again and the `cap` (smallest
+    * ids kept per bucket) truncates with a smallest-id bias — each +1
+    * of maxBits doubles the ladder's reach.
+    */
+  private[graft] case class Geometry(cellSize: Int = 24,
+      maxCells: Int = 64, orphanMaxFrac: Double = 0.8, bands: Int = 8,
+      maxBits: Int = 16, targetLoad: Int = 4, cap: Int = 1024) {
+    // the composite leaf id (c1−1)·2·maxCells + cell tops out at
+    // 2·maxCells² and is an IntegerType column — past 16384 the cast
+    // would wrap and distinct leaves would silently collide into one id
+    // (members cross-matched with wrong centroids). The lower bound is
+    // 1: each parent's 2-wide id block holds its one cell plus its one
+    // orphan-reseed cell, so maxCells = 1 prunes nothing but stays
+    // correct.
+    require(maxCells >= 1 && maxCells <= 16384,
+      s"maxCells must be in [1, 16384] (the composite leaf id " +
+        s"2*maxCells^2 must fit an Int), got $maxCells")
+    require(cellSize >= 1, s"cellSize must be ≥ 1, got $cellSize")
+    // bandBitsCol folds over (bandMinBits until maxBits), so maxBits
+    // below bandMinBits would freeze bits = bandMinBits > maxBits into
+    // a store and every band key would bleed into the next band's
+    // plane block, silently, for the store's lifetime
+    require(bands >= 1 && maxBits >= bandMinBits && targetLoad >= 1 &&
+        cap >= 1,
+      s"banded geometry out of range: bands=$bands (≥1), " +
+        s"maxBits=$maxBits (≥$bandMinBits), targetLoad=$targetLoad (≥1), " +
+        s"cap=$cap (≥1)")
+  }
+
+  /** The geometry the C14c gate store is written with: clamp shrunk to
+    * cellSize·maxCells = 8 (every sf's label blocks count as mega) and
+    * orphanMaxFrac = -1 (any measured fraction exceeds it), so every
+    * label freezes `cont = true` and the store's probe routes every
+    * label through the banded leg. Band geometry stays default, so the
+    * banded oracle holds verbatim.
+    */
+  private[graft] val allContGeometry =
+    Geometry(cellSize = 2, maxCells = 4, orphanMaxFrac = -1.0)
+
+  /** The cell structure is
     * HIERARCHICAL (r12, closing the r11 `weak`): each label block is
     * split into ceil(|block| / (targetCellSize·maxCells)) level-1
     * parent cells (clamped to [1, maxCells]), and each parent into
@@ -262,13 +327,28 @@ object AnnPack extends QueryPack {
     * structure — seeds, centroids, cell ids, lists — is bit-identical
     * to the single-level build, so the audited small-block shape is
     * unchanged. maxCells bounds every seed heap and both probe
-    * broadcasts; past ~100k vectors per label it is the knob to raise
-    * (one --conf, no recompile; everything downstream is
-    * (label, cell)-keyed).
+    * broadcasts; past ~100k vectors per label it is the value to raise
+    * (everything downstream is (label, cell)-keyed).
+    *
+    * Leaf Lloyd rounds: hash-ordered seeds are effectively random
+    * members, and one round off them orphans a constant fraction of
+    * natural clusters across leaf boundaries — the orphaned leaf's
+    * radius balloons and the exact upper bound stops pruning it. Each
+    * extra round costs one assign+recenter pass over the block; recall
+    * stays 1 at any round count (radii cover final membership).
     */
-  private def targetCellSize(s: SparkSession): Int =
-    graft.GraftConf.targetCellSize(s)
-  private def maxCells(s: SparkSession): Int = graft.GraftConf.maxCells(s)
+  private val leafLloydRounds = 2
+
+  /** Orphan threshold (degrees) of the leaf build's post-assign reseed
+    * pass: members further than this from their assigned leaf centroid
+    * — overwhelmingly members of natural clusters the random seeding
+    * missed, which Lloyd rounds cannot recover because an empty cell
+    * dies in recenter — are pulled into one fresh per-parent
+    * seed+assign round of their own, so their old leaves' radii
+    * tighten. Also the angle the round-1 orphan fraction (the
+    * `orphanMaxFrac` trigger) counts against.
+    */
+  private val orphanRad = math.toRadians(30.0)
 
   /** Scalar mirror of the per-parent `n_cells` Column in
     * [[labelCellsOf]] — the spec asserts the executed cell structure
@@ -279,11 +359,9 @@ object AnnPack extends QueryPack {
     * reseed cells can push the leaf count past this), and bigger
     * blocks split per-parent by the same formula.
     */
-  private[graft] def cellsForBlock(n: Long,
-      tcs: Int = graft.GraftConf.DefaultTargetCellSize,
-      mc: Int = graft.GraftConf.DefaultMaxCells): Int =
-    math.min(mc.toLong,
-      math.max(2L, math.ceil(n / tcs.toDouble).toLong)).toInt
+  private[graft] def cellsForBlock(n: Long, g: Geometry = Geometry()): Int =
+    math.min(g.maxCells.toLong,
+      math.max(2L, math.ceil(n / g.cellSize.toDouble).toLong)).toInt
 
   /** Level-1 slack — MODE hysteresis only (r13): a block pays the
     * second level only once it is l1Slack× past the single-level clamp
@@ -311,11 +389,10 @@ object AnnPack extends QueryPack {
     * single-level fast path and have no parents at all).
     */
   private[graft] def l1CellsForBlock(n: Long,
-      tcs: Int = graft.GraftConf.DefaultTargetCellSize,
-      mc: Int = graft.GraftConf.DefaultMaxCells): Int =
-    math.min(mc.toLong,
+      g: Geometry = Geometry()): Int =
+    math.min(g.maxCells.toLong,
       math.max(1L,
-        math.ceil(n / (tcs.toDouble * mc)).toLong)).toInt
+        math.ceil(n / (g.cellSize.toDouble * g.maxCells)).toLong)).toInt
   /** Slack covering the rounding of [[Vectors.cosine]] (6 decimals,
     * |Δcos| ≤ 5e-7) through acos near |cos|=1, where the amplification
     * is unbounded: acos(1−δ) ≈ √(2δ), so a 5e-7 cosine perturbation
@@ -428,10 +505,10 @@ object AnnPack extends QueryPack {
     * heap, and broadcast stays ≤maxCells rows; the corpus-scale passes
     * are two assign+recenter rounds instead of one.
     */
-  private[graft] def cellIndexOf(n: DataFrame): CellIndex = {
-    val s = n.sparkSession
-    val tcs = targetCellSize(s)
-    val mc = maxCells(s)
+  private[graft] def cellIndexOf(n: DataFrame,
+      g: Geometry = Geometry()): CellIndex = {
+    val tcs = g.cellSize
+    val mc = g.maxCells
     // per-label block counts (one partial-agg pass, a tiny
     // ≤|labels|-row result) — persisted because the mode peek, the
     // parent-count broadcast and the single-level cell counts all read
@@ -499,7 +576,7 @@ object AnnPack extends QueryPack {
       val lists1 = bandN.select(col("vec_id"), col("label"),
           lit(1).cast(IntegerType).as("c1"), col("v"), col("nrm"))
         .persistTracked
-      val (centRB, listsB) = leafCellStructure(lists1, tcs, mc, s)
+      val (centRB, listsB) = leafCellStructure(lists1, g)
       if (minBlock > clamp) return CellIndex(None, centRB, listsB)
       val smallCnt = cnt.filter(col("n_l") <= clamp)
       val smallN = n.join(broadcast(smallCnt.select(col("label"))),
@@ -531,7 +608,7 @@ object AnnPack extends QueryPack {
     val lists1 = assignToCells(n, cent1)
       .withColumnRenamed("cell", "c1")
       .persistTracked
-    val (centR, lists) = leafCellStructure(lists1, tcs, mc, s)
+    val (centR, lists) = leafCellStructure(lists1, g)
     // per-parent radius over the parent's final membership
     val radii1 = lists1
       .join(broadcast(cent1.withColumnRenamed("cell", "c1")),
@@ -591,13 +668,15 @@ object AnnPack extends QueryPack {
     * label at the hierarchical level paid leafLloydRounds + the orphan
     * pass in corpus-scale passes for the measured −22% mass (the 8×
     * media sweep) — a trade a 100 TB corpus should make through the
-    * orphanMaxFrac conf, not unconditionally. Round-1 structure is
+    * geometry's orphanMaxFrac, not unconditionally. Round-1 structure is
     * identical either way; when every label refines, the output is
     * bit-identical to the old unconditional build (the Lloyd rounds
     * resume from the materialized round-1 assignment).
     */
-  private def leafCellStructure(lists1: DataFrame, tcs: Int, mc: Int,
-      s: SparkSession): (DataFrame, DataFrame) = {
+  private def leafCellStructure(lists1: DataFrame,
+      g: Geometry): (DataFrame, DataFrame) = {
+    val tcs = g.cellSize
+    val mc = g.maxCells
     val keys = Seq("label", "c1")
     // leaf count per parent, from the parent's ACTUAL
     // membership (argmax assignment is not uniform)
@@ -607,10 +686,6 @@ object AnnPack extends QueryPack {
           ceil(count(lit(1)) / lit(tcs.toDouble))))
         .cast(IntegerType).as("n_cells"))
     val seeds2 = seedCells(lists1, keys, nC2, mc)
-    val rounds = math.max(1, graft.GraftConf.leafLloydRounds(s))
-    val orphanDeg = graft.GraftConf.orphanAngleDeg(s)
-    val orphanRad = if (orphanDeg <= 0) Double.MaxValue
-      else math.toRadians(orphanDeg)
     // a (keys..., cell, cv, cnrm) centroid table → the assignment +
     // angle-to-own-centroid frame the orphan split (and the adaptive
     // trigger) read
@@ -634,20 +709,20 @@ object AnnPack extends QueryPack {
     // to isolate; a reseed would re-cluster the whole block (round 1
     // already did) and the extra passes buy little (sf0.1 media: frac
     // 0.96, −3.4% mass for ~3× build wall on the band; −22% mass on
-    // the 8× hierarchical media sweep — a trade the conf now owns) —
+    // the 8× hierarchical media sweep — the trade orphanMaxFrac owns) —
     // the label keeps its one-round structure, radii falling out of
     // the angles already computed. Below it, the far members mark
     // orphaned natural clusters and the label refines (planted
     // 30-member clusters: frac 0.61, 15× mass cut; the Lloyd rounds
-    // and the orphan pass — see GraftConf.LeafLloydRoundsKey/
-    // OrphanAngleDegKey for the pathology each closes). The decision
+    // and the orphan pass — see leafLloydRounds/orphanRad for the
+    // pathology each closes). The decision
     // is per label so a clustered minority label co-resident with a
     // continuum majority (or vice versa) never inherits the wrong
     // branch; homogeneous corpora get a single-branch plan with zero
     // dead stages. Recall stays 1 on EVERY branch (radii cover final
     // membership; the bound never depended on assignment quality).
     val assigned1 = assignWithAngles(cent0)
-    val maxFrac = graft.GraftConf.orphanMaxFrac(s)
+    val maxFrac = g.orphanMaxFrac
     // one job materializes the persist AND reads every label's stat
     val fracRows = assigned1.groupBy(col("label"))
       .agg(avg(when(col("ang") > orphanRad, 1.0).otherwise(0.0))
@@ -662,23 +737,18 @@ object AnnPack extends QueryPack {
     def refined(a1: DataFrame, l1: DataFrame): (DataFrame, DataFrame) = {
       // Lloyd rounds 2..N resume from the materialized round-1
       // assignment, then the orphan split
-      val (assigned, centFinal) =
-        if (rounds <= 1) (a1, cent0)
-        else {
-          var cent2 = recenterCells(a1.drop("ang"), keys)
-          for (_ <- 2 until rounds)
-            cent2 = recenterCells(assignToCells(l1, cent2, keys), keys)
-          val cf = cent2.persistTracked
-          (assignToCells(l1, cf, keys)
-            .join(broadcast(cf), keys :+ "cell")
-            .withColumn("ang", clampedAngle(
-              Vectors.cosine(col("v"), col("cv"), col("nrm"),
-                col("cnrm"))))
-            .select(col("vec_id"), col("label"), col("c1"),
-              col("cell"), col("v"), col("nrm"), col("ang"))
-            .persistTracked, cf)
-        }
-      finishWithOrphans(assigned, centFinal, tcs, mc, orphanRad)
+      var cent2 = recenterCells(a1.drop("ang"), keys)
+      for (_ <- 2 until leafLloydRounds)
+        cent2 = recenterCells(assignToCells(l1, cent2, keys), keys)
+      val cf = cent2.persistTracked
+      val assigned = assignToCells(l1, cf, keys)
+        .join(broadcast(cf), keys :+ "cell")
+        .withColumn("ang", clampedAngle(
+          Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
+        .select(col("vec_id"), col("label"), col("c1"),
+          col("cell"), col("v"), col("nrm"), col("ang"))
+        .persistTracked
+      finishWithOrphans(assigned, cf, tcs, mc)
     }
     if (skipLabels.isEmpty) // all-clustered corpus
       return refined(assigned1, lists1)
@@ -707,8 +777,7 @@ object AnnPack extends QueryPack {
   /** The no-reseed leaf structure straight off an angle-carrying
     * assignment: composite leaf ids, radii reused from the attached
     * angles (the centroids in `cent` are exactly what `assigned` was
-    * measured against). Serves the per-label continuum skip AND the
-    * statically-disabled orphan pass.
+    * measured against). Serves the per-label continuum skip.
     */
   private def plainLeafStructure(assigned: DataFrame, cent: DataFrame,
       mc: Int): (DataFrame, DataFrame) = {
@@ -727,12 +796,7 @@ object AnnPack extends QueryPack {
   }
 
   private def finishWithOrphans(assigned: DataFrame, cent2: DataFrame,
-      tcs: Int, mc: Int, orphanRad: Double): (DataFrame, DataFrame) = {
-    // orphan pass statically disabled (orphanAngleDeg <= 0): `orph` is
-    // provably empty — return the plain assignment instead of paying
-    // ~five no-op stages of seed/recenter/assign/union
-    if (orphanRad == Double.MaxValue)
-      return plainLeafStructure(assigned, cent2, mc)
+      tcs: Int, mc: Int): (DataFrame, DataFrame) = {
     val keep = assigned.filter(col("ang") <= orphanRad)
       .select(col("vec_id"), col("label"), col("c1"), col("cell"),
         col("v"), col("nrm"))
@@ -782,8 +846,9 @@ object AnnPack extends QueryPack {
   /** [[cellIndexOf]] exposed in the legacy (centR, lists) shape for
     * the flat-probe consumers ([[graft.sources.EmbedStore]]).
     */
-  private[graft] def labelCellsOf(n: DataFrame): (DataFrame, DataFrame) = {
-    val ci = cellIndexOf(n)
+  private[graft] def labelCellsOf(n: DataFrame,
+      g: Geometry = Geometry()): (DataFrame, DataFrame) = {
+    val ci = cellIndexOf(n, g)
     (ci.centR, ci.lists)
   }
 
@@ -921,46 +986,19 @@ object AnnPack extends QueryPack {
     */
   private[graft] def rangePairs(s: SparkSession, d: String,
       tau: Double): DataFrame =
-    rangePairsAuto(vecs(s, d), lshDim, tau)
+    rangePairsOf(vecs(s, d), tau)
 
-  /** Conf-dispatched range-pair engine (r13): ONE entry point for the
-    * composed consumers (C10 semantic_dedup / C16's election input via
-    * [[rangePairs]], F7's media verdict), switched by
-    * `spark.graft.ann.rangeEngine`:
-    *  - `exact` (default) — [[rangePairsOf]], the recall-1 cell-bound
-    *    path every brute-force oracle verifies; candidate mass is
-    *    data-dependent (the isotropic worst case measured 63.4× at 8×).
-    *  - `banded` — [[bandedRangePairsOf]], candidate mass linear BY
-    *    CONSTRUCTION (n·bands·(bits+1)·cap); recall is the LSH
-    *    contract, and the pair graph is ⊆ the exact engine's at the
-    *    same τ (verdicts only ever come from exact cosines), so a
-    *    downstream component/election verdict can only split clusters,
-    *    never invent a pair — the refinement the spec pins.
-    *  - `auto` (r14) — [[autoRangePairsOf]]: the routing PER LABEL,
-    *    off the statistics the engine already computes.
-    * Gate rows run at the default; a 100× unstructured corpus flips
-    * the conf per job instead of paying the exact candidate curve.
-    */
-  private[graft] def rangePairsAuto(n: DataFrame, dim: Int,
-      tau: Double): DataFrame =
-    graft.GraftConf.rangeEngine(n.sparkSession) match {
-      case "banded" => bandedRangePairsOf(n, dim, tau)
-      case "auto" => autoRangePairsOf(n, dim, tau)
-      case _ => rangePairsOf(n, tau)
-    }
-
-  /** Per-label round-1 orphan fraction over a normed frame — the AUTO
-    * dispatch statistic, the SAME number the build's continuum trigger
-    * reads inside [[leafCellStructure]]: seed, one recenter round,
-    * assign with angles, then the per-label fraction of members
-    * further than orphanAngleDeg from their round-1 centroid. Costs
-    * ~three passes over `n` (which auto only pays on the
-    * above-the-clamp labels); returns ≤|labels| rows to the driver —
-    * the established metadata-scale peek discipline.
+  /** Per-label round-1 orphan fraction over a normed frame — the
+    * store's frozen `cont` routing statistic, the SAME number the
+    * build's continuum trigger reads inside [[leafCellStructure]]:
+    * seed, one recenter round, assign with angles, then the per-label
+    * fraction of members further than [[orphanRad]] from their round-1
+    * centroid. Costs ~three passes over `n` (which the store only pays
+    * on the above-the-clamp labels); returns ≤|labels| rows to the
+    * driver — the established metadata-scale peek discipline.
     */
   private[graft] def round1OrphanFracByLabel(n: DataFrame, tcs: Int,
       mc: Int): Array[org.apache.spark.sql.Row] = {
-    val s = n.sparkSession
     val keys = Seq("label", "c1")
     val lists1 = n.select(col("vec_id"), col("label"),
       lit(1).cast(IntegerType).as("c1"), col("v"), col("nrm"))
@@ -970,9 +1008,6 @@ object AnnPack extends QueryPack {
         .cast(IntegerType).as("n_cells"))
     val cent0 = recenterCells(
       assignToCells(lists1, seedCells(lists1, keys, nC2, mc), keys), keys)
-    val orphanDeg = graft.GraftConf.orphanAngleDeg(s)
-    val orphanRad = if (orphanDeg <= 0) Double.MaxValue
-      else math.toRadians(orphanDeg)
     assignToCells(lists1, cent0, keys)
       .join(broadcast(cent0), keys :+ "cell")
       .withColumn("ang", clampedAngle(
@@ -1023,76 +1058,6 @@ object AnnPack extends QueryPack {
     def side(joinType: String): DataFrame =
       n.join(route, n("label") <=> route("__route_label"), joinType)
     (side("left_semi"), side("left_anti"))
-  }
-
-  /** PER-LABEL auto dispatch (r14 — the r13 verdict's task 1): the
-    * global conf forces a mixed corpus — a few mega-label continuum
-    * blocks beside many small clustered labels — to pick ONE engine
-    * for all labels; this routes each label to the engine that wins
-    * its regime, in one plan:
-    *  - labels at or under the single-level clamp (tcs·mc) take the
-    *    exact path unconditionally — the audited gate shape, recall 1;
-    *  - bigger labels are measured by the round-1 continuum fraction
-    *    (the same statistic the build's orphanMaxFrac trigger reads):
-    *    clustered big labels stay exact (the refined/hierarchical
-    *    build keeps their candidate mass near-linear — planted 8.3× at
-    *    8× where linear is 8), continuum big labels route banded
-    *    (the exact path is data-inherently super-linear there by the
-    *    recall-1 contract; banded bounds mass BY CONSTRUCTION at LSH
-    *    recall).
-    * Homogeneous corpora collapse to a single-engine plan with zero
-    * dead stages (every gate corpus is all-under-clamp and returns the
-    * exact plan verbatim). Verdicts are ⊆ the exact engine's at the
-    * same τ: the exact side is identical, and banded pairs only ever
-    * come from exact cosines. The dispatch statistic costs the big
-    * labels one extra round-1 build (~3 passes over their rows);
-    * continuum labels then SKIP the exact build and probe entirely —
-    * the asymmetry the trade is priced for.
-    */
-  /** The first-tier dispatch statistic as ONE clamp-bounded driver
-    * peek (r16 — the r15 verdict's task 2): the label count and the
-    * above-the-clamp label list, computed in-query so the driver never
-    * holds |labels| rows — a label with more than `clamp` rows is
-    * pigeonhole-bounded at N/clamp of them, so the collected payload
-    * is one row holding ≤ N/clamp labels regardless of how many small
-    * labels the corpus carries. Labels ride inside a struct: a bare
-    * `when(...)` feed would make collect_list silently drop a BIG
-    * NULL-label group (list aggregation skips nulls — the wrapper is
-    * never null even when its field is).
-    */
-  private[graft] def bigLabelStat(n: DataFrame,
-      clamp: Long): (Long, Seq[Any]) = {
-    val stat = n.groupBy(col("label")).agg(count(lit(1)).as("n_l"))
-      .agg(count(lit(1)).as("n_labels"),
-        collect_list(when(col("n_l") > clamp, struct(col("label"))))
-          .as("big"))
-      .collect()(0)
-    (stat.getLong(0),
-      stat.getSeq[org.apache.spark.sql.Row](1).map(_.get(0)))
-  }
-
-  private[graft] def autoRangePairsOf(n: DataFrame, dim: Int,
-      tau: Double): DataFrame = {
-    val s = n.sparkSession
-    val tcs = targetCellSize(s)
-    val mc = maxCells(s)
-    val clamp = tcs.toLong * mc
-    // one clamp-bounded peek: block sizes decide the first tier
-    val (nLabels, bigLabels) = bigLabelStat(n, clamp)
-    if (bigLabels.isEmpty) return rangePairsOf(n, tau)
-    // routing decisions travel as broadcast-joined frames, never as
-    // literal isin lists (r15 — see labelFrame on why)
-    val (bigSide, _) = splitByLabels(n, bigLabels)
-    // ≤|bigLabels| rows — already N/clamp-bounded by the first tier
-    val contLabels = round1OrphanFracByLabel(bigSide, tcs, mc)
-      .filter(_.getDouble(1) > graft.GraftConf.orphanMaxFrac(s))
-      .map(_.get(0)).toSeq
-    if (contLabels.isEmpty) return rangePairsOf(n, tau)
-    if (contLabels.size == nLabels)
-      return bandedRangePairsOf(n, dim, tau)
-    val (contSide, exactSide) = splitByLabels(n, contLabels)
-    rangePairsOf(exactSide, tau)
-      .unionByName(bandedRangePairsOf(contSide, dim, tau))
   }
 
   /** The D6 candidate stage over an arbitrary normed frame — the
@@ -1189,8 +1154,8 @@ object AnnPack extends QueryPack {
   //  - the probe side multi-probes each band's exact key plus all
   //    `bits` single-bit flips (recall margin without inflating the
   //    index side);
-  //  - the index side is capped at `spark.graft.ann.bandMaxPerBucket`
-  //    (default 1024) SMALLEST ids per (label, band, key) via the
+  //  - the index side is capped at the geometry's `cap` (default
+  //    1024) SMALLEST ids per (label, band, key) via the
   //    TopKPerKey bounded heap — worst-case pair mass is
   //    n·bands·(bits+1)·cap, LINEAR in n on any corpus including a
   //    constant-vector flood.
@@ -1202,29 +1167,13 @@ object AnnPack extends QueryPack {
   // the gate row's oracle MIRRORS the banding (deterministic planes ⇒
   // full hash-match), and the recall-vs-exact spec measures the gap
   // against the exact-cell path.
-  // Geometry knobs live in GraftConf (r13 — the r12 verdict's "the
-  // ladder tops out at compile-time constants"): bandNumBands /
-  // bandMaxBits / bandTargetLoad read from Spark conf at plan-build
-  // time, the plane count DERIVING as bands × maxBits so the ladder's
-  // reach (targetLoad·2^maxBits vectors per label before `bits` clamps
-  // and the per-bucket cap starts truncating) is a per-job setting.
-  // Only the floor stays a constant: below 2^minBits keys the bucket
-  // count is too small for banding to mean anything.
-  private[graft] val bandMinBits = 4
-
-  /** Geometry check shared by every banded-path entry point — the
-    * persisted EmbedStore leg included: `bandBitsCol(maxBits, load)`
-    * folds over `(bandMinBits until maxBits)`, so maxBits below
-    * bandMinBits would freeze bits=bandMinBits > maxBits into a store
-    * and every band key would bleed into the next band's plane block
-    * (silently, for the store's lifetime) instead of failing fast the
-    * way the in-query path does.
-    */
-  private[graft] def requireBandGeometry(numBands: Int, maxBits: Int,
-      targetLoad: Int): Unit =
-    require(numBands >= 1 && maxBits >= bandMinBits && targetLoad >= 1,
-      s"banded geometry out of range: bands=$numBands (≥1), " +
-        s"maxBits=$maxBits (≥$bandMinBits), targetLoad=$targetLoad (≥1)")
+  // The geometry ([[Geometry]]'s band fields) is an argument, the
+  // plane count DERIVING as bands × maxBits so the ladder's reach
+  // (targetLoad·2^maxBits vectors per label before `bits` clamps and
+  // the per-bucket cap starts truncating) moves with maxBits. Only the
+  // floor is fixed: below 2^minBits keys the bucket count is too small
+  // for banding to mean anything.
+  private[graft] final val bandMinBits = 4
 
   /** The integer bit-width ladder as a Column over a per-label count
     * `n_l`: minBits + Σ_{b=minBits}^{maxBits−1} [n_l > targetLoad·2^b].
@@ -1239,23 +1188,21 @@ object AnnPack extends QueryPack {
 
   /** Scalar mirror of [[bandBitsCol]] for specs. */
   private[graft] def bandBitsForBlock(n: Long,
-      maxBits: Int = graft.GraftConf.DefaultBandMaxBits,
-      targetLoad: Int = graft.GraftConf.DefaultBandTargetLoad): Int =
-    bandMinBits + (bandMinBits until maxBits)
-      .count(b => n > targetLoad.toLong * (1L << b))
+      g: Geometry = Geometry()): Int =
+    bandMinBits + (bandMinBits until g.maxBits)
+      .count(b => n > g.targetLoad.toLong * (1L << b))
 
   /** SQL mirror of [[bandBitsCol]] over a column expression `n` — at
     * the DEFAULT geometry: the oracle strings are static, so gate rows
-    * must run at default conf (the [[graft.GraftConf]] scaladoc
-    * contract).
+    * run at the default band geometry.
     */
-  private[graft] def bandBitsSql(n: String): String =
-    s"$bandMinBits + " + (bandMinBits until
-        graft.GraftConf.DefaultBandMaxBits)
-      .map(b => s"(CASE WHEN $n > ${
-        graft.GraftConf.DefaultBandTargetLoad.toLong * (1L << b)} " +
+  private[graft] def bandBitsSql(n: String): String = {
+    val g = Geometry()
+    s"$bandMinBits + " + (bandMinBits until g.maxBits)
+      .map(b => s"(CASE WHEN $n > ${g.targetLoad.toLong * (1L << b)} " +
         "THEN 1 ELSE 0 END)")
       .mkString(" + ")
+  }
 
   /** Plan-side vector-width guard (no driver peek): a vector of the
     * wrong width would silently project against a truncated/NULL-padded
@@ -1305,14 +1252,8 @@ object AnnPack extends QueryPack {
     * sweep's mass rows read either engine.
     */
   private[graft] def bandedRangeCandidatesOf(n: DataFrame, dim: Int,
-      maxPerBucket: Int = -1): DataFrame = {
-    val s = n.sparkSession
-    val cap = if (maxPerBucket > 0) maxPerBucket
-      else graft.GraftConf.annBandMaxPerBucket(s)
-    val numBands = graft.GraftConf.bandNumBands(s)
-    val maxBits = graft.GraftConf.bandMaxBits(s)
-    val targetLoad = graft.GraftConf.bandTargetLoad(s)
-    requireBandGeometry(numBands, maxBits, targetLoad)
+      g: Geometry = Geometry()): DataFrame = {
+    val Geometry(_, _, _, numBands, maxBits, targetLoad, cap) = g
     val nl = n.groupBy(col("label")).agg(count(lit(1)).as("n_l"))
     val bits = nl.select(col("label"),
       bandBitsCol(maxBits, targetLoad).as("bits"))
@@ -1358,8 +1299,8 @@ object AnnPack extends QueryPack {
     * sibling of [[rangePairsOf]], same output shape.
     */
   private[graft] def bandedRangePairsOf(n: DataFrame, dim: Int,
-      tau: Double, maxPerBucket: Int = -1): DataFrame =
-    bandedRangeCandidatesOf(n, dim, maxPerBucket)
+      tau: Double, g: Geometry = Geometry()): DataFrame =
+    bandedRangeCandidatesOf(n, dim, g)
       .withColumn("cos_sim",
         Vectors.cosine(col("qv"), col("vb"), col("qn"), col("nrmb")))
       .filter(col("cos_sim") >= tau)
@@ -1370,17 +1311,15 @@ object AnnPack extends QueryPack {
     * and label column names so the media oracle can compose it. Ends
     * in `bpairs(vec_id, nn_id, label, cos_sim)` (banded candidates,
     * exact cosine attached, NOT yet τ-filtered). Geometry AND the
-    * per-bucket cap are the DEFAULTS ([[graft.GraftConf]]): the index
-    * side keeps the `DefaultMaxPerBucket` smallest ids per (label,
+    * per-bucket cap are the DEFAULTS ([[Geometry]]): the index
+    * side keeps the default `cap` smallest ids per (label,
     * band, key) exactly as the engine's TopKPerKey does — without the
     * mirror, the first gate corpus growing a >cap bucket would
     * hash-mismatch silently (r12 ADVICE).
     */
   private[graft] def bandedPairsSql(dim: Int, id: String,
       lab: String): String = {
-    val numBands = graft.GraftConf.DefaultBandNumBands
-    val maxBits = graft.GraftConf.DefaultBandMaxBits
-    val cap = graft.GraftConf.DefaultMaxPerBucket
+    val Geometry(_, _, _, numBands, maxBits, _, cap) = Geometry()
     s"""
       p AS (${Vectors.sql.planes(numBands * maxBits, dim)}),
       sbits AS (SELECT n.$id, n.$lab,
@@ -2690,9 +2629,7 @@ object AnnPack extends QueryPack {
     * bits join and re-attach as sentinels, as in the engine.
     */
   private val embedIncBandedOracle: String = {
-    val numBands = graft.GraftConf.DefaultBandNumBands
-    val maxBits = graft.GraftConf.DefaultBandMaxBits
-    val cap = graft.GraftConf.DefaultMaxPerBucket
+    val Geometry(_, _, _, numBands, maxBits, _, cap) = Geometry()
     s"""
       WITH $vecsSql,
       p AS (${Vectors.sql.planes(numBands * maxBits, lshDim)}),
@@ -2771,11 +2708,11 @@ object AnnPack extends QueryPack {
     Some(embedIncBandedOracle))
 
   /** Build (once per JVM × dataset) the C14c AUTO-gate store: the C14
-    * history, but with the routing statistic conf-PINNED at build so
-    * the frozen cont flag is deterministic at EVERY scale factor —
-    * clamp shrunk to tcs·mc = 8 (every sf's label blocks count as
-    * mega) and orphanMaxFrac = -1 (any measured fraction exceeds it),
-    * so every label freezes `cont = true` and the auto probe routes
+    * history, but written at [[allContGeometry]], which the store
+    * freezes, so the cont flag is deterministic at EVERY scale factor —
+    * clamp shrunk to cellSize·maxCells = 8 (every sf's label blocks
+    * count as mega) and orphanMaxFrac = -1 (any measured fraction
+    * exceeds it), so every label freezes `cont = true` and the probe routes
     * the whole batch through the banded leg: the one routing outcome
     * an oracle can mirror without reimplementing the cell build in
     * SQL. Sound at any geometry: the exact leg's recall-1 bound never
@@ -2797,17 +2734,8 @@ object AnnPack extends QueryPack {
       val hist = Tables.embeddings(s, d)
         .filter(pmod(col("vec_id"), lit(2)) === 0)
         .select(col("vec_id"), col("label"), col("embedding"))
-      val keys = Seq(graft.GraftConf.TargetCellSizeKey -> "2",
-        graft.GraftConf.MaxCellsKey -> "4",
-        graft.GraftConf.OrphanMaxFracKey -> "-1")
-      val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-      try {
-        keys.foreach { case (k, v) => s.conf.set(k, v) }
-        graft.sources.EmbedStore.write(hist, base, dir)
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      graft.sources.EmbedStore.write(hist, base, dir,
+        geometry = allContGeometry)
     }
     base
   }
@@ -2821,15 +2749,8 @@ object AnnPack extends QueryPack {
   // gets recurring ≥sf1 coverage.
   private val dedupIncEmbedAuto = GraftQuery(
     "dedup_incremental_embedding_auto",
-    (s, d) => {
-      val base = embStoreAuto(s, d)
-      s.conf.set(graft.GraftConf.RangeEngineKey, "auto")
-      // the routing peek is EAGER (metadata-scale _bbits/_cells reads),
-      // so the returned frame is fully routed before the conf restores
-      try graft.sources.EmbedStore.dedupAgainstAuto(s, base,
-          oddBatch(s, d)).orderBy(col("vec_id"))
-      finally s.conf.unset(graft.GraftConf.RangeEngineKey)
-    },
+    (s, d) => graft.sources.EmbedStore.dedupAgainstAuto(s,
+        embStoreAuto(s, d), oddBatch(s, d)).orderBy(col("vec_id")),
     Some(embedIncBandedOracle))
 
   /** Build (once per JVM × dataset × path-shape) the D12 gate's PQ

@@ -154,6 +154,8 @@ object DedupPack extends QueryPack {
           col("bk.key").as("key"))
   }
 
+  private val defaultMaxPerBucket = 1024
+
   /** The C2 banding candidate generator — (doc_a, doc_b,
     * n_shared_bands) from the band-key self-join — factored so C2 and
     * C2b band IDENTICALLY by construction (review finding: a verbatim
@@ -175,7 +177,7 @@ object DedupPack extends QueryPack {
     * docs sharing a bucket, recall stays 1. For a surviving pair whose
     * doc_b was capped out of SOME of its buckets, `n_shared_bands`
     * counts only the surviving collisions — at the default cap
-    * (GraftConf, 1024) both effects are unreachable on non-degenerate
+    * (1024) both effects are unreachable on non-degenerate
     * corpora (sf0.1's hottest band bucket is ~30 docs), so the gated
     * rows run capped AND still hash-match the uncapped brute-force
     * oracle. The degenerate shape is spec-pinned with a planted
@@ -183,9 +185,7 @@ object DedupPack extends QueryPack {
     * stores and the SimHash engine.
     */
   private[graft] def bandCandidates(sh: DataFrame,
-      maxPerBucket: Int = -1): DataFrame = {
-    val cap = if (maxPerBucket > 0) maxPerBucket
-      else graft.GraftConf.minhashMaxPerBucket(sh.sparkSession)
+      cap: Int = defaultMaxPerBucket): DataFrame = {
     val keyed = bandKeys(sh)
     val a = keyed.select(col("doc_id").as("doc_a"), col("band"),
       col("key"))
@@ -205,7 +205,7 @@ object DedupPack extends QueryPack {
     // runs once per session, not once per consumer (CacheManager
     // dedupes the identical subplan across the queries); explicit-cap
     // callers (the planted-flood specs) stay unpersisted
-    if (maxPerBucket > 0) cand else cand.persistTracked
+    if (cap == defaultMaxPerBucket) cand.persistTracked else cand
   }
 
   private def minhashPairs(s: SparkSession, d: String): DataFrame = {

@@ -319,13 +319,11 @@ object MediaPack extends QueryPack {
       Tables.parallelized(Tables.documents(s, d))).toDF())
       .persistTracked
 
-  /** F7 engine over an arbitrary media frame (spec entry point).
-    * Routed through the conf dispatcher (r13): the default is the
-    * exact cell-bound path the gate oracle brute-forces; a corpus
+  /** F7 engine over an arbitrary media frame (spec entry point): the
+    * exact cell-bound path the gate oracle brute-forces. A corpus
     * whose exact candidate mass goes super-linear (media's similarity
-    * continuum — the measured 63.4× at 8×) flips
-    * `spark.graft.ann.rangeEngine=banded` per job and takes F7b's
-    * linear-by-construction engine under the SAME τ verdict.
+    * continuum — the measured 63.4× at 8×) takes F7b's
+    * linear-by-construction engine under the SAME τ verdict instead.
     */
   def semanticDedupOver(media: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
@@ -338,7 +336,7 @@ object MediaPack extends QueryPack {
     */
   private[graft] def semanticDedupOverNormed(
       n: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    AnnPack.rangePairsAuto(n, embedDims, mediaTau)
+    AnnPack.rangePairsOf(n, mediaTau)
       .select(col("vec_id"), col("nn_id"), col("label"), col("cos_sim"))
       .orderBy(col("vec_id"), col("nn_id"))
 

@@ -101,15 +101,6 @@ object SimHashPack extends QueryPack {
     */
   private[graft] val defaultMaxPerBucket = 1024
 
-  /** Resolved cap: an explicit positive argument wins; otherwise the
-    * [[graft.GraftConf.SimhashMaxPerBucketKey]] Spark conf (default
-    * [[defaultMaxPerBucket]]) — the 100 TB knob is turnable per job,
-    * not a recompile (r11 polish item).
-    */
-  private def capOf(s: SparkSession, maxPerBucket: Int): Int =
-    if (maxPerBucket > 0) maxPerBucket
-    else graft.GraftConf.simhashMaxPerBucket(s)
-
   /** The shared multi-probe candidate engine over a (doc_id, sig)
     * frame: exact-key index side (capped — see [[defaultMaxPerBucket]])
     * ⋈ flip-probe side on the composite block key, pair-level dedupe,
@@ -119,8 +110,7 @@ object SimHashPack extends QueryPack {
     * media paths.
     */
   private[graft] def nearPairs(sigs: DataFrame,
-      maxPerBucket: Int = -1): DataFrame = {
-    val cap = capOf(sigs.sparkSession, maxPerBucket)
+      cap: Int = defaultMaxPerBucket): DataFrame = {
     val idxAll = sigs
       .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
         explode(exactBkeys(col("sig"))).as("bkey_b"))

@@ -114,13 +114,25 @@ object AnnIndex {
   def write(embs: DataFrame, path: String, k: Int = 8,
       iters: Int = 2): Unit = {
     val n = normed(embs)
+    trainAndLand(n, k, iters, s"$path/centroids", s"$path/lists")
+  }
+
+  /** Train the centroids on the normed `n`, land them at `centDir`,
+    * then route every vector to them and land the postings at
+    * `listsDir`.
+    * The routing reads the centroids BACK from `centDir` (k rows), as
+    * [[append]] and [[search]] do: assigning against the training
+    * lineage itself would run the unrolled Lloyd rounds a second time.
+    */
+  private def trainAndLand(n: DataFrame, k: Int, iters: Int,
+      centDir: String, listsDir: String): Unit = {
     val corpus = AnnPack.kmCorpus(n)
-    val cent = AnnPack.kmCentroids(corpus, k, iters)
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    writeLists(AnnPack.kmAssign(corpus, cent)
+    AnnPack.kmCentroids(corpus, k, iters)
+      .write.mode("overwrite").parquet(centDir)
+    writeLists(AnnPack.kmAssign(corpus, n.sparkSession.read.parquet(centDir))
       .join(n.select(col("vec_id"), col("nrm")), "vec_id")
       .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
-      s"$path/lists", "overwrite")
+      listsDir, "overwrite")
   }
 
   /** Fold new vectors into the index WITHOUT retraining — the ANN leg
@@ -213,18 +225,12 @@ object AnnIndex {
         .dropDuplicates("vec_id")
         .select(col("vec_id"), col("v"), col("nrm"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val corpus = AnnPack.kmCorpus(
-          n.select(col("vec_id"), col("v"), col("nrm")))
-        val cent = AnnPack.kmCentroids(corpus, k, iters)
+      try
         swapGeneration(spark, path) { gNew =>
-          cent.write.mode("overwrite").parquet(centroidsDir(path, gNew))
-          writeLists(AnnPack.kmAssign(corpus, cent)
-            .join(n.select(col("vec_id"), col("nrm")), "vec_id")
-            .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
-            listsDir(path, gNew), "overwrite")
+          trainAndLand(n, k, iters, centroidsDir(path, gNew),
+            listsDir(path, gNew))
         }
-      } finally n.unpersist()
+      finally n.unpersist()
     }
 
   /** Postings file count per cell directory of the SERVING lists —

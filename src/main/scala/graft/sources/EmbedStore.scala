@@ -81,22 +81,41 @@ object EmbedStore {
     * BANDED leg (r13 — the r12 verdict's top task: the exact cell
     * probe's candidate mass is data-dependent, measured 63.4× at 8× on
     * unstructured vectors, so a 100 TB history needs the
-    * linear-by-construction path persisted too).
+    * linear-by-construction path persisted too). `geometry` is the
+    * cell and band geometry the store is built at; it is FROZEN into
+    * `_bbits`, and every later append, rebuild, backfill and routing
+    * read takes it from there, never from the session. An empty
+    * history has no `_bbits` row to carry it, so it is written only at
+    * the default geometry.
     */
   def write(history: DataFrame, tableBase: String, path: String,
-      buckets: Int = 8): Unit = {
+      buckets: Int = 8,
+      geometry: AnnPack.Geometry = AnnPack.Geometry()): Unit = {
     val spark = history.sparkSession
     val n = normed(history)
-    val (centR, lists) = AnnPack.labelCellsOf(n)
+    // the geometry peek: one driver-side width read per store BUILD
+    // (not per probe); an empty history freezes dim=1 with zero labels,
+    // which every probe then short-circuits on
+    val dim = dimOf(n)
+    require(dim.isDefined || geometry == AnnPack.Geometry(),
+      s"EmbedStore '$tableBase': an empty history cannot freeze a " +
+        s"non-default geometry ($geometry)")
+    val (centR, lists) = AnnPack.labelCellsOf(n, geometry)
     Bucketed.writePlain(
       centR.select(col("label"), col("c_cell").as("cell"), col("cv"),
         col("cnrm"), col("r")),
       s"${tableBase}_cells", s"$path/cells", Seq("label", "cell"))
     Bucketed.writeBucketed(listsRows(lists),
       s"${tableBase}_lists", "ckey", buckets, s"$path/lists")
-    writeBandedLeg(spark, n, tableBase, path, buckets)
+    writeBandedLeg(spark, n, dim.getOrElse(1), geometry, tableBase, path,
+      buckets)
     spark.catalog.refreshTable(s"${tableBase}_cells")
   }
+
+  /** Vector width of a normed frame's first row (None when empty). */
+  private def dimOf(n: DataFrame): Option[Int] =
+    n.select(size(col("v")).as("d")).limit(1).collect()
+      .headOption.map(_.getInt(0))
 
   /** Near-dup verdict for `batch` (vec_id, label, embedding) against
     * the store: (vec_id, n_hist_matches, hist_canonical, best_cos) —
@@ -147,39 +166,34 @@ object EmbedStore {
   // linear-mass-by-construction path against a 100 TB history ----
   //
   // Two more tables under the same base name:
-  //  - `<base>_bbits` — (label, bits, dim, bands, max_bits, cont,
-  //    bgen, n_meas, n_app): the per-label band-key width, FROZEN at
+  //  - `<base>_bbits` — (label, bits, <geometry>, cont, bgen, n_meas,
+  //    n_app): the per-label band-key width, FROZEN at
   //    the label's first write (the LmStore frozen-threshold
   //    discipline: the ladder's input is the block size, which appends
   //    grow — re-deriving bits on append would re-key the label's
   //    ENTIRE history, a rebuild in disguise; frozen-by-contract is
   //    the honest incremental design, and bits only gates candidate
   //    recall, never a verdict — those come from exact cosines).
-  //    dim/bands/max_bits pin the plane geometry the probe must
-  //    rebuild (md5-derived planes regenerate bit-identically from
-  //    these three ints); `cont` is the frozen per-label continuum
-  //    routing flag the auto probe reads (r14); `bgen` is the banded
+  //    The geometry columns (dim, bands, max_bits, target_load, cap,
+  //    cell_size, max_cells, orphan_max_frac — the same values on every
+  //    row) are the store's frozen [[AnnPack.Geometry]]: dim/bands/
+  //    max_bits pin the planes the probe must rebuild (md5-derived
+  //    planes regenerate bit-identically from these three ints), the
+  //    rest is what appends, rebuilds and the routing stat read back
+  //    (see [[geometryOf]]); `cont` is the frozen per-label continuum
+  //    routing flag [[dedupAgainstAuto]] reads (r14); `bgen` is the banded
   //    leg's SERVING key generation — the single value the atomic
   //    rebuild's commit flips (r15); n_meas/n_app are the staleness
   //    basis [[bandedStaleness]] reports. Metadata-scale.
   //  - `<base>_bands` — (bkey, h_id, hv, hnrm, bgen): the banded
   //    inverted index, bucketed+sorted by `bkey` = label:band:key
   //    fused into ONE composite column (the MinHashStore lesson), the
-  //    index side capped at `spark.graft.ann.bandMaxPerBucket`
-  //    SMALLEST h_ids per key at write, every row stamped with its
-  //    key generation (probes read only the serving one — see
-  //    [[servingBands]]; pre-r15 tables lack the column and pass
-  //    unfiltered). Vectors are stored inline (×bands duplication —
-  //    the classic LSH index trade) so the probe never joins back
-  //    through the corpus-scale lists table. Under the SLIM layout
-  //    (r14, spark.graft.ann.bandStoreLayout=slim) the rows are
-  //    (bkey, h_id, bgen) only and the payload lives ONCE in
-  //  - `<base>_bvecs` — (h_id, hv, hnrm), bucketed by h_id: 1× the
-  //    vector payload instead of ×bands, traded for one extra
-  //    candidate-scale sort-merge join at probe time. Generation-free
-  //    (content is h_id → payload, stable across rebuilds). The
-  //    layout is frozen into the store (probes detect it from the
-  //    _bands schema); a declared rebuildBandedLeg may change it.
+  //    index side capped at the geometry's `cap` SMALLEST h_ids per
+  //    key at write, every row stamped with its key generation (probes
+  //    read only the serving one — see [[servingBands]]; pre-r15 tables
+  //    lack the column and pass unfiltered). Vectors are stored inline
+  //    (×bands duplication — the classic LSH index trade) so the probe
+  //    never joins back through the corpus-scale lists table.
   //
   // Append is additive: new rows are capped PER BATCH, so a bucket can
   // exceed the cap by one cap's worth per append generation until a
@@ -192,32 +206,47 @@ object EmbedStore {
     * call sites key on (r13 ADVICE: append/probe keyed on _bbits while
     * compact keyed on _bands, so the two torn states a crash inside
     * [[writeBandedLeg]] can leave — _bbits-only, or _bands-only after
-    * a torn backfill — each made one path throw instead of heal). A
-    * SLIM-layout store (r14) additionally needs its `_bvecs` payload
-    * table: slim `_bands` rows carry no vectors, so a torn
-    * slim write without `_bvecs` must heal too.
+    * a torn backfill — each made one path throw instead of heal).
     */
   private def bandedLegComplete(spark: SparkSession,
       tableBase: String): Boolean =
     spark.catalog.tableExists(s"${tableBase}_bbits") &&
-      spark.catalog.tableExists(s"${tableBase}_bands") &&
-      (!bandedLayoutSlim(spark, tableBase) ||
-        spark.catalog.tableExists(s"${tableBase}_bvecs"))
+      spark.catalog.tableExists(s"${tableBase}_bands")
 
-  /** The frozen banded storage layout, detected from the `_bands`
-    * schema (slim rows carry no inline vector payload) — the probe,
-    * append and compact must follow what the store IS, not what the
-    * current conf says ([[graft.GraftConf.BandStoreLayoutKey]] is a
-    * write/rebuild-time knob).
+  /** The `_bbits` geometry columns, one literal per field. */
+  private def geometryCols(dim: Int, g: AnnPack.Geometry): Seq[Column] =
+    Seq(lit(dim).as("dim"), lit(g.bands).as("bands"),
+      lit(g.maxBits).as("max_bits"), lit(g.targetLoad).as("target_load"),
+      lit(g.cap).as("cap"), lit(g.cellSize).as("cell_size"),
+      lit(g.maxCells).as("max_cells"),
+      lit(g.orphanMaxFrac).as("orphan_max_frac"))
+
+  /** The geometry the store froze at write, read back from `_bbits`
+    * in one metadata-scale peek. A field the store does not record —
+    * no `_bbits` (a store persisted before the banded leg, or one torn
+    * before it landed), no rows (an empty history), or a column that
+    * predates it — reads at its default.
     */
-  private def bandedLayoutSlim(spark: SparkSession,
-      tableBase: String): Boolean =
-    !spark.table(s"${tableBase}_bands").columns.contains("hv")
-
-  /** The slim layout's once-per-vector payload rows. */
-  private def bvecsRows(n: DataFrame): DataFrame =
-    n.select(col("vec_id").as("h_id"), col("v").as("hv"),
-      col("nrm").as("hnrm"))
+  private[graft] def geometryOf(spark: SparkSession,
+      tableBase: String): AnnPack.Geometry = {
+    val d = AnnPack.Geometry()
+    val t = s"${tableBase}_bbits"
+    if (!spark.catalog.tableExists(t)) return d
+    val bbits = spark.table(t)
+    val names = Seq("cell_size", "max_cells", "orphan_max_frac", "bands",
+      "max_bits", "target_load", "cap").filter(bbits.columns.contains)
+    val row = bbits
+      .select(names.map(c => first(col(c), ignoreNulls = true).as(c)): _*)
+      .head()
+    def get[T](c: String, dflt: T): T =
+      if (!names.contains(c) || row.isNullAt(row.fieldIndex(c))) dflt
+      else row.getAs[T](c)
+    AnnPack.Geometry(get("cell_size", d.cellSize),
+      get("max_cells", d.maxCells),
+      get("orphan_max_frac", d.orphanMaxFrac), get("bands", d.bands),
+      get("max_bits", d.maxBits), get("target_load", d.targetLoad),
+      get("cap", d.cap))
+  }
 
   /** label+band+key as ONE join column, matching the bands table's
     * bucket spec.
@@ -226,35 +255,31 @@ object EmbedStore {
     concat_ws(":", label.cast("string"), band.cast("string"), key)
 
   /** Banded index rows for a normed frame under a frozen bits table —
-    * capped at `cap` smallest h_ids per key (TopKPerKey bounded heap).
-    * `slim` drops the inline vector payload BEFORE the cap heap (the
-    * r14 slim layout: keys shuffle at ~16 bytes/row instead of the
-    * vector width — the write gets cheaper along with the storage).
-    * `bgen` (r15) stamps each row with the banded-leg GENERATION it
-    * belongs to — the column the atomic [[rebuildBandedLeg]] keys its
-    * serve-through on; `None` keeps the pre-r15 row shape for appends
-    * into a store whose `_bands` table has no `bgen` column yet.
+    * capped at the geometry's `cap` smallest h_ids per key (TopKPerKey
+    * bounded heap). `bgen` (r15) stamps each row with the banded-leg
+    * GENERATION it belongs to — the column the atomic
+    * [[rebuildBandedLeg]] keys its serve-through on; `None` keeps the
+    * pre-r15 row shape for appends into a store whose `_bands` table
+    * has no `bgen` column yet.
     */
   private def bandsRowsOf(n: DataFrame, bbits: DataFrame, dim: Int,
-      numBands: Int, maxBits: Int, cap: Int, slim: Boolean,
-      bgen: Option[Int]): DataFrame = {
+      g: AnnPack.Geometry, bgen: Option[Int]): DataFrame = {
     val rows0 = n.withColumn("v", AnnPack.bandDimGuard(dim))
-      .withColumn("sigbits", AnnPack.bandSigBits(dim, numBands * maxBits))
+      .withColumn("sigbits", AnnPack.bandSigBits(dim, g.bands * g.maxBits))
       .join(broadcast(bbits.select(col("label"), col("bits"))),
         Seq("label"))
       .select(col("vec_id").as("h_id"), col("label"), col("v"),
-        col("nrm"), explode(AnnPack.bandKeyCols(numBands, maxBits))
+        col("nrm"), explode(AnnPack.bandKeyCols(g.bands, g.maxBits))
           .as("bk"))
       .select(bkey3(col("label"), col("bk.band"), col("bk.key"))
           .as("bkey"),
         col("h_id"), col("v").as("hv"), col("nrm").as("hnrm"))
-    val rows1 = if (slim) rows0.select(col("bkey"), col("h_id")) else rows0
     val rows = bgen match {
-      case Some(g) => rows1.withColumn("bgen", lit(g))
-      case None => rows1
+      case Some(gen) => rows0.withColumn("bgen", lit(gen))
+      case None => rows0
     }
     graft.plans.TopKPerKey(rows, Seq(col("bkey")),
-      Seq(col("h_id").asc), cap)
+      Seq(col("h_id").asc), g.cap)
   }
 
   /** The banded leg's SERVING key generation — the max non-null `bgen`
@@ -293,12 +318,12 @@ object EmbedStore {
     * given geometry, stamped with key generation `bgen` (≤|labels|
     * rows). FREEZES the continuum statistic per label (r14): the
     * build/rebuild is the one moment the store can MEASURE
-    * clusteredness — the same round-1 orphan fraction the in-query
-    * auto dispatch and the cell build's trigger read — so the auto
-    * probe router can send clustered mega-labels to the recall-1 exact
+    * clusteredness — the same round-1 orphan fraction the cell build's
+    * trigger reads — so [[dedupAgainstAuto]] can send clustered mega-labels to the recall-1 exact
     * leg and only continuum ones to the banded leg. Measured on the
-    * >clamp labels only (~3 passes over just their rows, once per
-    * build/rebuild); under-clamp labels are never continuum-routed.
+    * >clamp labels only (cellSize·maxCells of the store's geometry;
+    * ~3 passes over just their rows, once per build/rebuild);
+    * under-clamp labels are never continuum-routed.
     * Frozen like bits: appends do not re-measure (a declared rebuild
     * does) — which is why the row also records the STALENESS basis
     * (r15 — the r14 verdict's task 5): `n_meas` is the block size this
@@ -308,10 +333,9 @@ object EmbedStore {
     * never a literal isin list; see [[AnnPack.labelFrame]]).
     */
   private def bbitsPlan(spark: SparkSession, n: DataFrame, dim: Int,
-      numBands: Int, maxBits: Int, targetLoad: Int,
-      bgen: Int): DataFrame = {
-    val tcs = graft.GraftConf.targetCellSize(spark)
-    val mc = graft.GraftConf.maxCells(spark)
+      g: AnnPack.Geometry, bgen: Int): DataFrame = {
+    val tcs = g.cellSize
+    val mc = g.maxCells
     val clamp = tcs.toLong * mc
     val cnt = n.groupBy(col("label")).agg(count(lit(1)).as("n_l"))
     val bigLabels = cnt.filter(col("n_l") > clamp).select(col("label"))
@@ -320,61 +344,28 @@ object EmbedStore {
       else AnnPack.round1OrphanFracByLabel(
           n.join(broadcast(cnt.filter(col("n_l") > clamp)
             .select(col("label"))), Seq("label"), "left_semi"), tcs, mc)
-        .filter(_.getDouble(1) > graft.GraftConf.orphanMaxFrac(spark))
+        .filter(_.getDouble(1) > g.orphanMaxFrac)
         .map(_.get(0)).toSeq
     val contDf = AnnPack.labelFrame(spark, n.schema("label").dataType,
       contLabels).withColumn("__cont", lit(true))
     cnt.join(broadcast(contDf), Seq("label"), "left")
-      .select(col("label"),
-        AnnPack.bandBitsCol(maxBits, targetLoad).as("bits"),
-        lit(dim).as("dim"), lit(numBands).as("bands"),
-        lit(maxBits).as("max_bits"),
+      .select(Seq(col("label"),
+        AnnPack.bandBitsCol(g.maxBits, g.targetLoad).as("bits")) ++
+        geometryCols(dim, g) ++ Seq(
         coalesce(col("__cont"), lit(false)).as("cont"),
         lit(bgen).as("bgen"), col("n_l").as("n_meas"),
-        lit(0L).as("n_app"))
+        lit(0L).as("n_app")): _*)
   }
 
-  private def writeBandedLeg(spark: SparkSession, n: DataFrame,
-      tableBase: String, path: String, buckets: Int): Unit = {
-    val numBands = graft.GraftConf.bandNumBands(spark)
-    val maxBits = graft.GraftConf.bandMaxBits(spark)
-    val targetLoad = graft.GraftConf.bandTargetLoad(spark)
-    // same fail-fast as the in-query engine: an out-of-range conf here
-    // would FREEZE mis-keyed geometry into the store for its lifetime
-    AnnPack.requireBandGeometry(numBands, maxBits, targetLoad)
-    val cap = graft.GraftConf.annBandMaxPerBucket(spark)
-    val slim = graft.GraftConf.bandStoreLayout(spark) == "slim"
-    // the geometry peek: one driver-side width read per store BUILD
-    // (not per probe); an empty history freezes dim=1 with zero labels,
-    // which every probe then short-circuits on
-    val dim = n.select(size(col("v")).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(1)
+  private def writeBandedLeg(spark: SparkSession, n: DataFrame, dim: Int,
+      g: AnnPack.Geometry, tableBase: String, path: String,
+      buckets: Int): Unit = {
     // a fresh build starts the key-generation clock at 1
-    val bbits = bbitsPlan(spark, n, dim, numBands, maxBits, targetLoad,
-      bgen = 1)
-    Bucketed.writePlain(bbits, s"${tableBase}_bbits", s"$path/bbits",
-      Seq("label"))
-    // slim payload table BEFORE the keys table: a crash between the
-    // two leaves bands missing → bandedLegComplete heals; the reverse
-    // order would leave keys referencing vectors the probe's inner
-    // join silently drops — a permanent recall hole
-    if (slim)
-      Bucketed.writeBucketed(bvecsRows(n), s"${tableBase}_bvecs",
-        "h_id", buckets, s"$path/bvecs")
-    else if (spark.catalog.tableExists(s"${tableBase}_bvecs")) {
-      // a declared inline (re)build of a formerly-slim store retires
-      // the payload sidecar, or the stale table would shadow the next
-      // slim rebuild's fresh one
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_bvecs")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-          s"$path/bvecs*"))).getOrElse(Array.empty)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
+    Bucketed.writePlain(bbitsPlan(spark, n, dim, g, bgen = 1),
+      s"${tableBase}_bbits", s"$path/bbits", Seq("label"))
     Bucketed.writeBucketed(
-      bandsRowsOf(n, spark.table(s"${tableBase}_bbits"), dim, numBands,
-        maxBits, cap, slim, bgen = Some(1)),
+      bandsRowsOf(n, spark.table(s"${tableBase}_bbits"), dim, g,
+        bgen = Some(1)),
       s"${tableBase}_bands", "bkey", buckets, s"$path/bands")
     spark.catalog.refreshTable(s"${tableBase}_bbits")
   }
@@ -438,24 +429,9 @@ object EmbedStore {
       // append of THIS batch (same contract as the exact leg)
       .filter(col("vec_id") =!= col("h_id"))
       // multi-band hits AND replayed duplicate bands rows collapse at
-      // pair level BEFORE the cosine (duplicates carry identical hv —
-      // and before the slim layout's payload join, so the join input
-      // is one row per candidate pair)
+      // pair level BEFORE the cosine (duplicates carry identical hv)
       .dropDuplicates("vec_id", "h_id")
-    // slim layout (r14): the bands rows carry no payload — fetch it
-    // through the h_id-bucketed _bvecs table (candidate-scale batch
-    // side shuffles; the corpus-scale vecs side reads its buckets in
-    // place). Replayed duplicate _bvecs rows collapse AT THE SCAN
-    // (dropDuplicates on the bucket key = a bucket-local aggregate,
-    // no exchange — duplicates carry identical payload under the
-    // globally-unique-id ingest contract), so the join emits one row
-    // per candidate pair without a second candidate-scale shuffle
-    val withPayload = if (bandedLayoutSlim(spark, tableBase))
-      cand.select(col("vec_id"), col("h_id"))
-        .join(spark.table(s"${tableBase}_bvecs").dropDuplicates("h_id"),
-          Seq("h_id"))
-    else cand
-    val verified = withPayload
+    val verified = cand
       .join(n.select(col("vec_id"), col("v").as("qv"),
         col("nrm").as("qn")), Seq("vec_id"))
       .withColumn("cos_sim",
@@ -471,43 +447,42 @@ object EmbedStore {
         coalesce(col("__best"), lit(0.0)).as("best_cos"))
   }
 
-  /** Conf-dispatched probe (r13 — the consumer-routing task): ONE
-    * entry point for callers that should not hard-code the engine
-    * (the StreamingIngest embed leg), switched by
-    * `spark.graft.ann.rangeEngine` exactly like the in-query
-    * [[graft.operators.AnnPack.rangePairsAuto]] dispatcher — `exact`
-    * (default; recall 1, candidate mass data-dependent), `banded`
-    * (mass bounded by construction; LSH recall, verdicts ⊆ exact's),
-    * or `auto` (r14): PER-LABEL routing. Same verdict row shape either
-    * way, so a 100 TB ingest flips one conf instead of editing the
-    * topology.
-    */
-  def dedupAgainstAuto(spark: SparkSession, tableBase: String,
-      batch: DataFrame, tau: Double = AnnPack.nearDupTau): DataFrame =
-    graft.GraftConf.rangeEngine(spark) match {
-      case "banded" => bandedDedupAgainst(spark, tableBase, batch, tau)
-      case "auto" => autoDedupAgainst(spark, tableBase, batch, tau)
-      case _ => dedupAgainst(spark, tableBase, batch, tau)
-    }
-
-  /** PER-LABEL auto probe (r14 — the r13 verdict's task 1, store
-    * side). The routing statistic is the FROZEN per-label continuum
-    * flag the build measured into `_bbits.cont` (the same round-1
-    * orphan fraction the in-query auto dispatch and the cell build's
-    * trigger read — the build is the one moment clusteredness is
+  /** PER-LABEL routed probe (r14 — the r13 verdict's task 1, store
+    * side): the one entry point for callers that should not hard-code
+    * the engine (the StreamingIngest embed leg). The routing statistic
+    * is the FROZEN per-label continuum flag the build measured into
+    * `_bbits.cont` (the same round-1 orphan fraction the cell build's
+    * trigger reads — the build is the one moment clusteredness is
     * measurable without a probe-time corpus pass): cont=true labels —
     * continuum mega-blocks, where the exact probe's candidate mass is
     * data-inherently super-linear — route through the banded leg's
     * by-construction mass bound; everything else (small labels AND
     * clustered mega-labels, whose refined/hierarchical cells keep the
-    * exact mass near-linear) keeps the recall-1 exact probe. Labels
-    * whose flag is NULL/absent — pre-r14 stores, or rows appended to
-    * one before its first rebuild — fall back per label to the
-    * metadata-scale cell-count saturation signal (count == maxCells ⇔
-    * history ≥ the single-level clamp at build; size-only, but both
-    * engines are verdict-sound and banded ⊆ exact). Batch labels the
-    * store has never seen take the exact side (sentinels either way).
+    * exact mass near-linear) keeps the recall-1 exact probe. On a
+    * store whose labels are all under the clamp this IS the exact
+    * probe. Labels whose flag is NULL/absent — pre-r14 stores — fall
+    * back per label to the metadata-scale cell-count saturation signal
+    * (count == the store's maxCells ⇔ history ≥ the single-level clamp
+    * at build; size-only, but both engines are verdict-sound and
+    * banded ⊆ exact). Batch labels the store has never seen take the
+    * exact side (sentinels either way). Same verdict row shape on
+    * every route.
     */
+  def dedupAgainstAuto(spark: SparkSession, tableBase: String,
+      batch: DataFrame, tau: Double = AnnPack.nearDupTau): DataFrame = {
+    val (nLabels, bandedLabels) = bandedRoutingStat(spark, tableBase)
+    if (bandedLabels.isEmpty)
+      return dedupAgainst(spark, tableBase, batch, tau)
+    if (bandedLabels.size == nLabels)
+      return bandedDedupAgainst(spark, tableBase, batch, tau)
+    // the routing decision re-enters as a broadcast-joined frame, not
+    // a literal isin list (r15 — see AnnPack.labelFrame); unseen-label
+    // batch rows land on the exact side via the anti join
+    val (bandedSide, exactSide) = AnnPack.splitByLabels(batch, bandedLabels)
+    dedupAgainst(spark, tableBase, exactSide, tau)
+      .unionByName(bandedDedupAgainst(spark, tableBase, bandedSide, tau))
+  }
+
   /** Per-tableBase memo of the routing stat, keyed on the sidecar
     * tables' LOCATIONS: both `_bbits` and `_cells` are rewritten
     * generation-swapped on every append/rebuild (their location URIs
@@ -529,17 +504,20 @@ object EmbedStore {
     * probe, |labels| rows at a high-cardinality label space. Eligible
     * labels are cont=true (frozen continuum measurement) or, where the
     * flag is NULL/absent (pre-r14 stores, unmeasured appends), the
-    * cell-count saturation fallback `n_cells = maxCells` ⇔ history at
-    * or past the single-level clamp — so every eligible label is a
-    * LARGE label and the collected list is history-size/clamp-bounded,
-    * never |labels|-bounded. The bbits join and the collect_list
-    * wrapper are null-safe (a NULL label group routes like any other —
-    * the AnnPack.splitByLabels discipline).
+    * cell-count saturation fallback `n_cells = maxCells` (the store's
+    * frozen maxCells) ⇔ history at or past the single-level clamp — so
+    * every eligible label is a LARGE label and the collected list is
+    * history-size/clamp-bounded, never |labels|-bounded. The bbits join
+    * and the collect_list wrapper are null-safe (a NULL label group
+    * routes like any other — the AnnPack.splitByLabels discipline). A
+    * store without a complete banded leg (persisted before it, or torn
+    * mid-write) has no eligible label: its exact leg serves unchanged.
     */
   private[graft] def bandedRoutingStat(spark: SparkSession,
       tableBase: String): (Long, Seq[Any]) = {
     val bbitsT = s"${tableBase}_bbits"
     val cellsT = s"${tableBase}_cells"
+    if (!bandedLegComplete(spark, tableBase)) return (0L, Seq.empty)
     // location + createTime: the generation swap moves the location
     // (append/rebuild invalidate), and a same-path fresh write() after
     // a drop gets a new createTime (a reused path must not serve the
@@ -549,12 +527,11 @@ object EmbedStore {
         spark.sessionState.sqlParser.parseTableIdentifier(t))
       s"${m.location}@${m.createTime}"
     }
-    val hasCont = spark.catalog.tableExists(bbitsT) &&
-      spark.table(bbitsT).columns.contains("cont")
-    val key = (if (hasCont) loc(bbitsT) else "") + "|" + loc(cellsT)
+    val hasCont = spark.table(bbitsT).columns.contains("cont")
+    val key = loc(bbitsT) + "|" + loc(cellsT)
     val memo = routingStatMemo.get(tableBase)
     if (memo != null && memo._1 == key) return memo._2
-    val mc = graft.GraftConf.maxCells(spark)
+    val mc = geometryOf(spark, tableBase).maxCells
     val cells = spark.table(cellsT)
       .groupBy(col("label")).agg(count(lit(1)).as("n_cells"))
     val flagged = if (hasCont) {
@@ -573,22 +550,6 @@ object EmbedStore {
       row.getSeq[org.apache.spark.sql.Row](1).map(_.get(0)))
     routingStatMemo.put(tableBase, (key, stat))
     stat
-  }
-
-  private def autoDedupAgainst(spark: SparkSession, tableBase: String,
-      batch: DataFrame, tau: Double): DataFrame = {
-    val (nLabels, bandedLabels) = bandedRoutingStat(spark, tableBase)
-    if (bandedLabels.isEmpty)
-      return dedupAgainst(spark, tableBase, batch, tau)
-    if (bandedLabels.size == nLabels)
-      return bandedDedupAgainst(spark, tableBase, batch, tau)
-    // the routing decision re-enters as a broadcast-joined frame, not
-    // a literal isin list (r15 — see AnnPack.labelFrame); unseen-label
-    // batch rows land on the exact side via the anti join, same as the
-    // old predicate routed them
-    val (bandedSide, exactSide) = AnnPack.splitByLabels(batch, bandedLabels)
-    dedupAgainst(spark, tableBase, exactSide, tau)
-      .unionByName(bandedDedupAgainst(spark, tableBase, bandedSide, tau))
   }
 
   /** Fold `embs` (vec_id, label, embedding — typically the batch's
@@ -634,15 +595,20 @@ object EmbedStore {
   }
 
   /** `_bbits` content widened to the full current column set — absent
-    * columns (pre-r14 `cont`, pre-r15 `bgen`/`n_meas`/`n_app`) surface
-    * as NULLs, which every reader already treats as "unmeasured"
-    * (the auto router's cell-count fallback; [[bandedStaleness]]'s
-    * null fraction; [[servingGen]]'s gen-1 default).
+    * columns (pre-r14 `cont`, pre-r15 `bgen`/`n_meas`/`n_app`, and the
+    * geometry columns past dim/bands/max_bits) surface as NULLs, which
+    * every reader already treats as "unmeasured" (the router's
+    * cell-count fallback; [[bandedStaleness]]'s null fraction;
+    * [[servingGen]]'s gen-1 default; [[geometryOf]]'s defaults).
     */
   private def withBbitsCols(bbits: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
-    val cols: Seq[(String, DataType)] = Seq("cont" -> BooleanType,
-      "bgen" -> IntegerType, "n_meas" -> LongType, "n_app" -> LongType)
+    import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType,
+      LongType}
+    val cols: Seq[(String, DataType)] = Seq("target_load" -> IntegerType,
+      "cap" -> IntegerType, "cell_size" -> IntegerType,
+      "max_cells" -> IntegerType, "orphan_max_frac" -> DoubleType,
+      "cont" -> BooleanType, "bgen" -> IntegerType, "n_meas" -> LongType,
+      "n_app" -> LongType)
     cols.foldLeft(bbits) { case (df, (c, t)) =>
       if (df.columns.contains(c)) df
       else df.withColumn(c, lit(null).cast(t))
@@ -679,39 +645,27 @@ object EmbedStore {
       return
     }
     val bbits = spark.table(bbitsT)
-    val meta = bbits.select(col("dim"), col("bands"), col("max_bits"))
-      .limit(1).collect()
-    // an empty-history store froze no geometry: this append IS the
-    // first write — freeze from the batch + current conf
-    val dim = meta.headOption.map(_.getInt(0)).getOrElse(
-      routed.select(size(col("v")).as("d")).limit(1).collect()
-        .headOption.map(_.getInt(0)).getOrElse(1))
-    val numBands = meta.headOption.map(_.getInt(1))
-      .getOrElse(graft.GraftConf.bandNumBands(spark))
-    val maxBits = meta.headOption.map(_.getInt(2))
-      .getOrElse(graft.GraftConf.bandMaxBits(spark))
-    val targetLoad = graft.GraftConf.bandTargetLoad(spark)
-    // frozen geometry was validated at write; the empty-history
-    // first-write fallback reads the conf and must fail fast the same
-    // way write() does
-    AnnPack.requireBandGeometry(numBands, maxBits, targetLoad)
-    val cap = graft.GraftConf.annBandMaxPerBucket(spark)
+    // the store's frozen geometry; an empty-history store froze no
+    // width, so this append IS its first write — the width comes from
+    // the batch
+    val g = geometryOf(spark, tableBase)
+    val dim = bbits.select(col("dim")).limit(1).collect().headOption
+      .map(_.getInt(0)).orElse(dimOf(routed)).getOrElse(1)
     val gServe = servingGen(spark, tableBase)
     val batchCnt = routed.groupBy(col("label"))
       .agg(count(lit(1)).as("n_l"))
     val fresh = batchCnt
       .join(broadcast(bbits.select(col("label"))), Seq("label"),
         "left_anti")
-      .select(col("label"),
-        AnnPack.bandBitsCol(maxBits, targetLoad).as("bits"),
-        lit(dim).as("dim"), lit(numBands).as("bands"),
-        lit(maxBits).as("max_bits"),
+      .select(Seq(col("label"),
+        AnnPack.bandBitsCol(g.maxBits, g.targetLoad).as("bits")) ++
+        geometryCols(dim, g) ++ Seq(
         // a fresh label starts as ONE new cell — clusteredness is not
         // measured on appends (the frozen discipline); it stays
         // exact-routed until a declared rebuild re-measures. n_meas is
         // the block size that implicit verdict was based on.
         lit(false).as("cont"), lit(gServe).as("bgen"),
-        col("n_l").as("n_meas"), lit(0L).as("n_app"))
+        col("n_l").as("n_meas"), lit(0L).as("n_app")): _*)
     // known labels: n_app += this batch's block contribution (the
     // r15 staleness counter). One metadata-scale generation-swapped
     // rewrite per append — the same cost class as the cells-radius
@@ -724,16 +678,6 @@ object EmbedStore {
       .drop("__b_n")
     Bucketed.rewritePlain(spark, bbitsT, grown.unionByName(fresh),
       Seq("label"))
-    // the append follows the store's FROZEN layout, not the current
-    // conf; payload rows land BEFORE key rows (same crash ordering
-    // as the build: keys referencing absent vectors would be a
-    // silent recall hole, extra unreferenced vectors are harmless
-    // and the replay's duplicates collapse at pair level)
-    val slim = bandedLayoutSlim(spark, tableBase)
-    if (slim)
-      Bucketed.appendBucketed(spark,
-        bvecsRows(routed.select(col("vec_id"), col("v"), col("nrm"))),
-        s"${tableBase}_bvecs")
     // new key rows join the SERVING generation (stamped only when the
     // table carries the column — a pre-r15 store's rows stay unstamped
     // until its first rebuild introduces the column)
@@ -743,21 +687,10 @@ object EmbedStore {
       bandsRowsOf(
         routed.select(col("vec_id"), col("label"), col("v"),
           col("nrm")),
-        spark.table(bbitsT), dim, numBands, maxBits, cap, slim, genOpt),
+        spark.table(bbitsT), dim, g, genOpt),
       s"${tableBase}_bands")
   }
 
-  /** Once-only in-place upgrade of a store persisted before the banded
-    * leg existed: build `_bbits`/`_bands` from the FULL persisted
-    * history — a batch-only backfill would leave every pre-upgrade
-    * vector outside the banded index, a permanent recall hole against
-    * the store contract — at the store's own catalog-derived location
-    * and bucket count. Labels come back TYPED via the metadata-scale
-    * cells table (the lists table fuses them into the string ckey).
-    * Called from append()/compact() when the sidecars are missing; the
-    * banded probe fails loudly instead (read-only paths stay
-    * read-only).
-    */
   /** The store's full persisted history as a normed (vec_id, label, v,
     * nrm) frame, plus the catalog-derived base path and bucket count —
     * shared by the banded backfill and the declared rebuild. Labels
@@ -783,10 +716,25 @@ object EmbedStore {
     (hist, base, buckets)
   }
 
+  /** Once-only in-place upgrade of a store persisted before the banded
+    * leg existed: build `_bbits`/`_bands` from the FULL persisted
+    * history — a batch-only backfill would leave every pre-upgrade
+    * vector outside the banded index, a permanent recall hole against
+    * the store contract — at the store's own catalog-derived location
+    * and bucket count. Labels come back TYPED via the metadata-scale
+    * cells table (the lists table fuses them into the string ckey).
+    * Called from append()/compact() when the sidecars are missing; the
+    * banded probe fails loudly instead (read-only paths stay
+    * read-only).
+    */
   private def backfillBandedLeg(spark: SparkSession,
       tableBase: String): Unit = {
+    // a torn write may have left _bbits (and with it the geometry)
+    // behind; a store persisted before the banded leg reads defaults
+    val g = geometryOf(spark, tableBase)
     val (hist, base, buckets) = persistedHistory(spark, tableBase)
-    writeBandedLeg(spark, hist, tableBase, base, buckets)
+    writeBandedLeg(spark, hist, dimOf(hist).getOrElse(1), g, tableBase,
+      base, buckets)
   }
 
   /** The append's routing + radius computation, severed
@@ -859,9 +807,9 @@ object EmbedStore {
     * 2; r15 — the r14 verdict's task 3: GENERATION-ATOMIC): re-derives
     * per-label bits (and the cont routing flags, resetting the
     * staleness clock) from the CURRENT history block sizes and re-caps
-    * every bucket at the current bandMaxPerBucket — the maintenance op
-    * that re-tightens the probe's mass bound after many appends. The
-    * bandMaxPerBucket cap applies per append GENERATION, so G appends
+    * every bucket at the store's `cap` — the maintenance op that
+    * re-tightens the probe's mass bound after many appends. The
+    * cap applies per append GENERATION, so G appends
     * can grow a hot bucket to G·cap and the probe's bands·(bits+1)·cap
     * bound degrades linearly in append count (the growth spec measures
     * it); compact() deliberately preserves rows — a row-preserving
@@ -875,8 +823,7 @@ object EmbedStore {
     * keeps the old leg serving at every instant by staging the new key
     * generation BESIDE the old one and committing with ONE atomic
     * catalog swap:
-    *  1. [[rebuildStage]] — payload first ([[bvecsRows]] re-landed for
-    *     slim stores, superset-safe for concurrent readers), then ONE
+    *  1. [[rebuildStage]] — ONE
     *     generation-swapped `_bands` rewrite holding old-serving ∪
     *     newly-derived rows, each stamped with its `bgen`. Probes
     *     still read the old generation: [[servingBands]] filters on
@@ -893,10 +840,12 @@ object EmbedStore {
     *     already invisible to [[servingBands]]; a crash here costs
     *     bytes, and the next rebuild's stage drops them anyway).
     * The serve-through costs one extra full `_bands` write (stage
-    * holds both generations) — the price of availability; the r14
-    * tear-down path remains for the one rebuild the staged design
-    * cannot hold in a single table: a LAYOUT migration (inline↔slim
-    * changes the `_bands` schema itself).
+    * holds both generations) — the price of availability.
+    *
+    * Geometry: the rebuild re-derives under the geometry the store
+    * froze at write ([[geometryOf]]), whatever the session says — so
+    * a store written at a non-default cell clamp keeps routing the
+    * same labels banded across any number of rebuilds.
     *
     * Replay safety: a rebuild changes which candidates the banded
     * probe sees (re-derived bits re-key labels; re-capping drops
@@ -910,18 +859,6 @@ object EmbedStore {
   def rebuildBandedLeg(spark: SparkSession, tableBase: String): Unit = {
     if (!bandedLegComplete(spark, tableBase)) {
       // nothing is serving — a torn write/pre-banded store: plain heal
-      backfillBandedLeg(spark, tableBase)
-      return
-    }
-    if ((graft.GraftConf.bandStoreLayout(spark) == "slim")
-        != bandedLayoutSlim(spark, tableBase)) {
-      // LAYOUT migration changes the _bands schema itself, which the
-      // serve-through stage cannot hold two generations of in one
-      // table: tear the keys table down FIRST (the r14 ordering
-      // argument — a crash mid-migration leaves the leg loudly
-      // INCOMPLETE, which the probe refuses and the next
-      // append/compact/rebuild heals, never silently mixed-geometry)
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_bands")
       backfillBandedLeg(spark, tableBase)
       return
     }
@@ -949,37 +886,23 @@ object EmbedStore {
     */
   private[graft] def rebuildStage(spark: SparkSession,
       tableBase: String): StagedRebuild = {
-    val numBands = graft.GraftConf.bandNumBands(spark)
-    val maxBits = graft.GraftConf.bandMaxBits(spark)
-    val targetLoad = graft.GraftConf.bandTargetLoad(spark)
-    AnnPack.requireBandGeometry(numBands, maxBits, targetLoad)
-    val cap = graft.GraftConf.annBandMaxPerBucket(spark)
-    val slim = bandedLayoutSlim(spark, tableBase)
+    val g = geometryOf(spark, tableBase)
     val gOld = servingGen(spark, tableBase)
     val gNew = gOld + 1
     // crash-replayed appends can leave duplicate history rows; the
     // rebuild collapses them so its output ≡ a fresh write() of the
     // deduplicated history. Persisted: the dedup shuffle feeds the dim
-    // peek, the cont measurement, the payload re-land and the key
-    // derivation — four consumers, one corpus pass.
+    // peek, the cont measurement and the key derivation — three
+    // consumers, one corpus pass.
     val hist = persistedHistory(spark, tableBase)._1
       .dropDuplicates("vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dim = hist.select(size(col("v")).as("d")).limit(1).collect()
-        .headOption.map(_.getInt(0)).getOrElse(1)
+      val dim = dimOf(hist).getOrElse(1)
       // severed: the commit must not re-scan the corpus, and the frame
       // must survive the _bands rewrite below
-      val bbitsNew = bbitsPlan(spark, hist, dim, numBands, maxBits,
-        targetLoad, gNew).localCheckpoint(true)
-      // payload BEFORE keys (the class-wide crash ordering): for slim
-      // stores the payload table is re-landed from the full history —
-      // a SUPERSET of every h_id either generation's keys reference
-      // (replay-duplicate rows collapse; concurrent readers see the
-      // retired generation's files under rewrite grace)
-      if (slim)
-        Bucketed.rewriteBucketed(spark, s"${tableBase}_bvecs",
-          bvecsRows(hist))
+      val bbitsNew = bbitsPlan(spark, hist, dim, g, gNew)
+        .localCheckpoint(true)
       val bandsT = s"${tableBase}_bands"
       val old = spark.table(bandsT)
       // serving rows ride along stamped with their generation (a
@@ -991,8 +914,7 @@ object EmbedStore {
         if (old.columns.contains("bgen")) old.filter(col("bgen") === gOld)
         else old.withColumn("bgen", lit(gOld))
       Bucketed.rewriteBucketed(spark, bandsT, servingOld.unionByName(
-        bandsRowsOf(hist, bbitsNew, dim, numBands, maxBits, cap, slim,
-          Some(gNew))))
+        bandsRowsOf(hist, bbitsNew, dim, g, Some(gNew))))
       StagedRebuild(gNew, bbitsNew)
     } finally hist.unpersist()
   }
@@ -1061,8 +983,6 @@ object EmbedStore {
     else {
       Bucketed.compactBucketed(spark, s"${tableBase}_bands")
       Bucketed.compactPlain(spark, s"${tableBase}_bbits", Seq("label"))
-      if (bandedLayoutSlim(spark, tableBase))
-        Bucketed.compactBucketed(spark, s"${tableBase}_bvecs")
     }
   }
 }

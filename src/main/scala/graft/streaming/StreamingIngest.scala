@@ -222,9 +222,9 @@ object StreamingIngest {
     bsh.unpersist()
     // semantic probe on the same slice the lexical probe reads — severed
     // BEFORE any append below mutates the vector history
-    // conf-dispatched (spark.graft.ann.rangeEngine): a 100 TB history
-    // routes the probe through the banded leg without editing the
-    // topology; the verdict row shape is identical either way
+    // routed per label off the store's frozen cont flags: continuum
+    // mega-labels take the banded leg, everything else the exact probe;
+    // the verdict row shape is identical either way
     val emb = embedBase.map { eb =>
       EmbedStore.dedupAgainstAuto(spark, eb, embBatchOf(survivors))
         .select(col("vec_id").as("doc_id"),

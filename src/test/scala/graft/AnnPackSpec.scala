@@ -366,7 +366,8 @@ class AnnPackSpec extends GraftSpec {
       Seq((100L, 0, other, on), (101L, 0, other, on))
     val n = rows.toDF("vec_id", "label", "v", "nrm")
     val cap = 8
-    val capped = operators.AnnPack.bandedRangeCandidatesOf(n, 32, cap)
+    val capped = operators.AnnPack.bandedRangeCandidatesOf(n, 32,
+      operators.AnnPack.Geometry(cap = cap))
     val plan = capped.queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey"),
       s"banded candidate join lost the per-bucket cap:\n$plan")
@@ -378,7 +379,8 @@ class AnnPackSpec extends GraftSpec {
       r.getAs[Long]("nn_id") == 101L),
       "the cap dropped a pair outside the flooded buckets")
     // uncapped control: the flood IS quadratic without the cap
-    val un = operators.AnnPack.bandedRangeCandidatesOf(n, 32, Int.MaxValue)
+    val un = operators.AnnPack.bandedRangeCandidatesOf(n, 32,
+      operators.AnnPack.Geometry(cap = Int.MaxValue))
       .collect().count(_.getAs[Long]("nn_id") <= 40L)
     assert(un == 40 * 39 / 2)
     Caches.releaseAll(blocking = true)
@@ -386,7 +388,7 @@ class AnnPackSpec extends GraftSpec {
 
   test("banded ladder cliff (r12 finding 1): past targetLoad·2^maxBits " +
       "the cap truncates with smallest-id bias — measured, and the " +
-      "maxBits knob is the fix") {
+      "raising maxBits is the fix") {
     // pair-clusters (size 2) so the cap can never bind on a dup group
     // itself: overload comes purely from DISTINCT clusters colliding in
     // the clamped key space, which is exactly the past-the-ladder
@@ -399,17 +401,15 @@ class AnnPackSpec extends GraftSpec {
     Caches.releaseAll(blocking = true)
     assert(exact.size >= 900, s"planted pairs missing: ${exact.size}")
     def banded(maxBits: Int, cap: Int): (Double, Long) = {
-      spark.conf.set(graft.GraftConf.BandMaxBitsKey, maxBits.toString)
-      try {
-        val mass = operators.AnnPack.bandedRangeCandidatesOf(n, 64, cap)
-          .count()
-        val got = operators.AnnPack.bandedRangePairsOf(n, 64, 0.75, cap)
-          .select(col("vec_id"), col("nn_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        Caches.releaseAll(blocking = true)
-        assert(got.subsetOf(exact), "banded invented a pair")
-        (got.size.toDouble / exact.size, mass)
-      } finally spark.conf.unset(graft.GraftConf.BandMaxBitsKey)
+      val g = operators.AnnPack.Geometry(maxBits = maxBits, cap = cap)
+      val mass = operators.AnnPack.bandedRangeCandidatesOf(n, 64, g)
+        .count()
+      val got = operators.AnnPack.bandedRangePairsOf(n, 64, 0.75, g)
+        .select(col("vec_id"), col("nn_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      Caches.releaseAll(blocking = true)
+      assert(got.subsetOf(exact), "banded invented a pair")
+      (got.size.toDouble / exact.size, mass)
     }
     // maxBits=6 puts the ladder's reach at targetLoad·2^6 = 256 ≪ 2000:
     // bits clamps, ~31 docs share each of the 64 per-band buckets, and
@@ -420,8 +420,8 @@ class AnnPackSpec extends GraftSpec {
       s"candidate mass $mSat exceeds n·bands·(bits+1)·cap")
     // same clamped ladder, default cap: no truncation, recall intact —
     // the cliff is the CAP binding, not the clamp alone
-    val (rRoom, _) = banded(6, graft.GraftConf.DefaultMaxPerBucket)
-    // the fix is one conf: maxBits=10 moves the reach past the block
+    val (rRoom, _) = banded(6, operators.AnnPack.Geometry().cap)
+    // the fix is one geometry field: maxBits=10 moves the reach past the block
     // (targetLoad·2^9 = 2048 ≥ 2000 ⇒ bits=9), bucket load back to
     // ≈targetLoad, and the SAME cap of 8 stops binding
     val (rFix, _) = banded(10, 8)
@@ -457,168 +457,12 @@ class AnnPackSpec extends GraftSpec {
     info(s"banded store verdict hits vs exact: $bandedHits/$exactHits")
   }
 
-  test("rangeEngine conf routes the composed consumers (r13): " +
-      "banded-routed pair graph ⊆ exact's, C10 clusters refine") {
-    // dispatcher ≡ engines on planted clusters
-    val n = plantedClusters(1000).repartition(8)
-    val exactPairs = operators.AnnPack.rangePairsAuto(n, 64, 0.75)
-      .select(col("vec_id"), col("nn_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Caches.releaseAll(blocking = true)
-    val bandedClu = try {
-      spark.conf.set(graft.GraftConf.RangeEngineKey, "banded")
-      val routed = operators.AnnPack.rangePairsAuto(n, 64, 0.75)
-        .select(col("vec_id"), col("nn_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      Caches.releaseAll(blocking = true)
-      assert(routed.subsetOf(exactPairs),
-        "banded-routed dispatcher invented a pair")
-      val recall = routed.size.toDouble / exactPairs.size
-      info(s"routed recall on planted clusters: " +
-        s"${routed.size}/${exactPairs.size} = $recall")
-      assert(recall >= 0.999)
-      // the composed C10 verdict itself, banded-routed
-      val clu = operators.DedupPack.semanticClusters(spark, sfDir)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      Caches.releaseAll(blocking = true)
-      clu
-    } finally spark.conf.unset(graft.GraftConf.RangeEngineKey)
-    val exactClu = operators.DedupPack.semanticClusters(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Caches.releaseAll(blocking = true)
-    assert(bandedClu.keySet == exactClu.keySet)
-    // edge subset ⇒ component refinement: every banded cluster sits
-    // INSIDE one exact cluster (the banded path can split a component,
-    // never bridge two)
-    bandedClu.groupBy(_._2).foreach { case (bc, members) =>
-      val ec = members.keys.map(exactClu).toSet
-      assert(ec.size == 1,
-        s"banded cluster $bc straddles exact clusters $ec")
-    }
-  }
-
-  test("rangeEngine=auto routes PER LABEL (r14): exact under the " +
-      "clamp and on clustered big labels, banded on continuum mega " +
-      "labels — both engines in ONE plan, verdicts ⊆ exact's") {
-    def relabel(df: org.apache.spark.sql.DataFrame, label: Int,
-        off: Long) = df.withColumn("label", lit(label))
-      .withColumn("vec_id", col("vec_id") + off)
-    // conf-shrunk clamp (tcs·mc = 64) so the spec corpus stays small;
-    // the conf path IS the engine path (GraftConf contract)
-    val small = relabel(plantedClusters(60), 0, 0L) // ≤ clamp → exact
-    val bigClu = relabel(plantedClusters(240, clusterSize = 40), 1,
-      10000L) // > clamp, clustered (low round-1 orphan frac) → exact
-    val bigCont = relabel(plantedClusters(240, clusterSize = 2), 2,
-      20000L) // > clamp, continuum (frac ≈ 1) → banded; dup-regime
-              // pairs so the banded side has real recall to measure
-    val mixed = small.unionByName(bigClu).unionByName(bigCont)
-      .repartition(8)
-    def pairs(df: org.apache.spark.sql.DataFrame) = {
-      val p = df.select(col("vec_id"), col("nn_id"), col("label"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        .toSet
-      Caches.releaseAll(blocking = true)
-      p
-    }
-    def onLabel(s: Set[(Long, Long, Int)], l: Int) = s.filter(_._3 == l)
-    try {
-      spark.conf.set(graft.GraftConf.TargetCellSizeKey, "8")
-      spark.conf.set(graft.GraftConf.MaxCellsKey, "8")
-      val exact = pairs(operators.AnnPack.rangePairsOf(mixed, 0.75))
-      val banded = pairs(
-        operators.AnnPack.bandedRangePairsOf(mixed, 64, 0.75))
-      spark.conf.set(graft.GraftConf.RangeEngineKey, "auto")
-      val auto = pairs(operators.AnnPack.rangePairsAuto(mixed, 64, 0.75))
-      assert(auto.subsetOf(exact), "auto invented a pair")
-      assert(onLabel(auto, 0) == onLabel(exact, 0),
-        "the under-clamp label must ride the exact engine verbatim")
-      assert(onLabel(auto, 1) == onLabel(exact, 1),
-        "the clustered big label must stay exact (its round-1 orphan " +
-          "fraction is below the trigger)")
-      assert(onLabel(auto, 2) == onLabel(banded, 2),
-        "the continuum mega-label must route through the banded engine")
-      assert(onLabel(exact, 2).nonEmpty, "planted dup pairs missing")
-      val recall = onLabel(auto, 2).size.toDouble / onLabel(exact, 2).size
-      info(s"auto recall on the banded-routed continuum label: " +
-        s"${onLabel(auto, 2).size}/${onLabel(exact, 2).size} = $recall")
-      assert(recall >= 0.99, s"dup-regime recall $recall on the " +
-        "banded-routed label — the LSH contract broke")
-    } finally {
-      spark.conf.unset(graft.GraftConf.TargetCellSizeKey)
-      spark.conf.unset(graft.GraftConf.MaxCellsKey)
-      spark.conf.unset(graft.GraftConf.RangeEngineKey)
-    }
-  }
-
-  test("rangeEngine=auto at MANY big labels (r15): the routing " +
-      "decision rides a broadcast-joined frame — no In/InSet literal " +
-      "label list anywhere in the plan — and per-label verdicts are " +
-      "identical to the r14 dispatch") {
-    // the r14 verdict's task 1: the per-label peek is metadata-scale,
-    // but re-injecting its result as a literal isin predicate grows
-    // the driver expression tree with the big-label count; planted
-    // here as 8 over-clamp labels (4 clustered → exact, 4 continuum →
-    // banded) + 1 small, so BOTH sides of the routing split are
-    // multi-label lists
-    def relabel(df: org.apache.spark.sql.DataFrame, label: Int,
-        off: Long) = df.withColumn("label", lit(label))
-      .withColumn("vec_id", col("vec_id") + off)
-    val small = relabel(plantedClusters(40), 0, 0L)
-    val blocks = (1 to 4).map(i => relabel(
-        plantedClusters(150, clusterSize = 30), i, i * 10000L)) ++
-      (5 to 8).map(i => relabel(
-        plantedClusters(150, clusterSize = 2), i, i * 10000L))
-    val mixed = blocks.foldLeft(small)(_ unionByName _).repartition(8)
-    def pairs(df: org.apache.spark.sql.DataFrame) = {
-      val p = df.select(col("vec_id"), col("nn_id"), col("label"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        .toSet
-      Caches.releaseAll(blocking = true)
-      p
-    }
-    def onLabel(s: Set[(Long, Long, Int)], l: Int) = s.filter(_._3 == l)
-    try {
-      spark.conf.set(graft.GraftConf.TargetCellSizeKey, "8")
-      spark.conf.set(graft.GraftConf.MaxCellsKey, "8")
-      val exact = pairs(operators.AnnPack.rangePairsOf(mixed, 0.75))
-      val banded = pairs(
-        operators.AnnPack.bandedRangePairsOf(mixed, 64, 0.75))
-      spark.conf.set(graft.GraftConf.RangeEngineKey, "auto")
-      val autoDf = operators.AnnPack.rangePairsAuto(mixed, 64, 0.75)
-      // the structural claim: routing carries NO literal label list —
-      // neither an In nor its large-list InSet compilation — and DOES
-      // carry the broadcast semi/anti routing joins
-      val plan = autoDf.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("INSET"),
-        "routing compiled a literal InSet label list into the plan")
-      assert(!"label#\\d+ IN \\(".r.findFirstIn(plan).isDefined,
-        "routing injected a literal In(label, ...) predicate")
-      assert(plan.contains("LeftSemi") && plan.contains("LeftAnti"),
-        "routing should travel as broadcast semi/anti joins")
-      val auto = pairs(autoDf)
-      assert(auto.subsetOf(exact), "auto invented a pair")
-      assert(onLabel(auto, 0) == onLabel(exact, 0))
-      (1 to 4).foreach(l => assert(onLabel(auto, l) == onLabel(exact, l),
-        s"clustered big label $l must ride the exact engine verbatim"))
-      (5 to 8).foreach(l => assert(onLabel(auto, l) == onLabel(banded, l),
-        s"continuum big label $l must route through the banded engine"))
-      assert((5 to 8).forall(l => onLabel(exact, l).nonEmpty))
-    } finally {
-      spark.conf.unset(graft.GraftConf.TargetCellSizeKey)
-      spark.conf.unset(graft.GraftConf.MaxCellsKey)
-      spark.conf.unset(graft.GraftConf.RangeEngineKey)
-    }
-  }
-
-  test("auto dispatch peek is clamp-bounded (r16): a high-cardinality " +
-      "label space collects the over-clamp labels only, and a NULL " +
-      "label routes by its own membership") {
-    // 400 tiny labels + 1 over-clamp label: the r15 shape collected
-    // |labels| = 401 rows to the driver; the bounded stat collects ONE
-    // row whose big-list is pigeonhole-bounded at N/clamp. One local
-    // frame, not a 401-way union (a foldLeft of unionByName builds a
-    // 400-deep plan tree whose repeated by-name analysis is
-    // quadratic — measured minutes of driver CPU)
+  test("splitByLabels routes a NULL label by its own membership " +
+      "(r16)") {
+    // 400 tiny labels + 1 big label as one local frame, not a 401-way
+    // union (a foldLeft of unionByName builds a 400-deep plan tree
+    // whose repeated by-name analysis is quadratic — measured minutes
+    // of driver CPU)
     import spark.implicits._
     val tinyRows = (1 to 400).flatMap(l => (0 until 2).map(i =>
       (l * 10000L + i, l, Seq.fill(4)(0.5), 1.0)))
@@ -626,24 +470,12 @@ class AnnPackSpec extends GraftSpec {
       (i.toLong, 0, Seq.fill(4)(0.5), 1.0))
     val mixed = (bigRows ++ tinyRows)
       .toDF("vec_id", "label", "v", "nrm").repartition(8)
-    val clamp = 64L // tcs 8 × mc 8, the dispatch specs' conf
-    val (nLabels, bigLabels) =
-      operators.AnnPack.bigLabelStat(mixed, clamp)
-    assert(nLabels == 401L)
-    assert(bigLabels == Seq(0),
-      s"expected exactly the over-clamp label, got $bigLabels")
-    assert(bigLabels.size <= mixed.count() / clamp,
-      "the collected list is not N/clamp-bounded")
-    // a NULL label with an over-clamp block is COLLECTED (the struct
-    // wrapper — a bare collect_list(when(...)) would silently drop
-    // it) and routed to the MEMBER side by the null-safe split
+    // a NULL label in the routing set routes its rows to the MEMBER
+    // side of the null-safe split
     val withNull = mixed.withColumn("label",
       when(col("label") === 0, lit(null)).otherwise(col("label")))
-    val (nl2, big2) = operators.AnnPack.bigLabelStat(withNull, clamp)
-    assert(nl2 == 401L && big2 == Seq(null),
-      s"NULL over-clamp label lost by the peek: $big2")
     val (members, nonMembers) =
-      operators.AnnPack.splitByLabels(withNull, big2)
+      operators.AnnPack.splitByLabels(withNull, Seq(null))
     assert(members.count() == 150 &&
       members.filter(col("label").isNull).count() == 150,
       "null-label rows must route to the member side when null is " +
@@ -654,6 +486,18 @@ class AnnPackSpec extends GraftSpec {
     val (m3, nm3) = operators.AnnPack.splitByLabels(withNull, Seq(7))
     assert(m3.filter(col("label").isNull).count() == 0 &&
       nm3.filter(col("label").isNull).count() == 150)
+    // a 400-label routing set travels as broadcast semi/anti joins —
+    // never a literal In/InSet label list in the plan (r15)
+    val (mAll, nmAll) =
+      operators.AnnPack.splitByLabels(mixed, (1 to 400).toSeq)
+    Seq(mAll -> "LeftSemi", nmAll -> "LeftAnti").foreach { case (df, j) =>
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(plan.contains(j), s"routing should be a $j join:\n$plan")
+      assert(!plan.contains("INSET") &&
+        "label#\\d+ IN \\(".r.findFirstIn(plan).isEmpty,
+        s"routing compiled a literal label list into the plan:\n$plan")
+    }
+    assert(mAll.count() == 800 && nmAll.count() == 150)
   }
 
   test("D3/C5/D6 plans: no window partitioned by a whole label block") {

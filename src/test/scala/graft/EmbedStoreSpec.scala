@@ -23,7 +23,7 @@ class EmbedStoreSpec extends GraftSpec {
   }
 
   private def cleanup(base: String, path: String): Unit = {
-    Seq("cells", "lists", "bands", "bbits", "bvecs").foreach(s =>
+    Seq("cells", "lists", "bands", "bbits").foreach(s =>
       spark.sql(s"DROP TABLE IF EXISTS ${base}_$s"))
     Caches.deleteDir(path)
   }
@@ -55,6 +55,14 @@ class EmbedStoreSpec extends GraftSpec {
     batch.select("vec_id").collect().map(_.getLong(0))
       .map(id => id -> x.getOrElse(id, (0L, -1L, 0.0))).toMap
   }
+
+  /** The shrunk cell clamp (cellSize·maxCells = 8) the routing specs
+    * freeze into their stores, and the per-bucket cap the growth specs
+    * freeze.
+    */
+  private val shrunk = operators.AnnPack.Geometry(cellSize = 2,
+    maxCells = 4)
+  private val cap4 = operators.AnnPack.Geometry(cap = 4)
 
   private def verdictMap(df: DataFrame): Map[Long, (Long, Long, Double)] =
     df.collect().map(r => r.getLong(0) ->
@@ -270,36 +278,41 @@ class EmbedStoreSpec extends GraftSpec {
     } finally { cleanup(base, path); cleanup(cb, cp) }
   }
 
-  test("dedupAgainstAuto routes by spark.graft.ann.rangeEngine: exact " +
-      "by default, the banded leg under one conf — same verdict shape") {
-    val history = embDf(Seq(
-      (2L, 1, Seq(1.0, 0.0, 0.0, 0.0)),
-      (4L, 1, Seq(0.0, 1.0, 0.0, 0.0))))
+  test("dedupAgainstAuto routes from the store it probes: exact at " +
+      "the default geometry, the banded leg on a store written at the " +
+      "all-cont geometry — same verdict shape") {
+    // 10 vectors in label 1: under the default clamp, past the all-cont
+    // geometry's clamp of 8
+    val history = embDf(Seq((2L, 1, Seq(1.0, 0.0, 0.0, 0.0))) ++
+      (1 to 9).map(i => (2L + 2 * i, 1, Seq(0.0, 1.0, 0.001 * i, 0.0))))
     val batch = embDf(Seq(
       (1L, 1, Seq(0.9995, 0.0005, 0.0, 0.0)), // near-identical to h2
-      (3L, 1, Seq(0.5, 0.5, 0.5, 0.5))))      // matches nothing at τ
+      (3L, 1, Seq(0.5, -0.5, 0.5, 0.5))))     // matches nothing at τ
     val (base, path) = freshBase()
+    val (bb, bp) = freshBase()
     try {
       EmbedStore.write(history, base, path)
       val viaDefault = verdictMap(
         EmbedStore.dedupAgainstAuto(spark, base, batch, tau))
       assert(viaDefault == verdictMap(
         EmbedStore.dedupAgainst(spark, base, batch, tau)))
-      spark.conf.set(graft.GraftConf.RangeEngineKey, "banded")
-      try {
-        val viaBanded = verdictMap(
-          EmbedStore.dedupAgainstAuto(spark, base, batch, tau))
-        assert(viaBanded == verdictMap(
-          EmbedStore.bandedDedupAgainst(spark, base, batch, tau)))
-        // near-identical payloads collide w.p. ≈1: the routed probe
-        // still finds the planted dup, and misses nothing exact found
-        assert(viaBanded == viaDefault,
-          s"banded-routed verdicts diverged: $viaBanded vs $viaDefault")
-      } finally spark.conf.unset(graft.GraftConf.RangeEngineKey)
-    } finally cleanup(base, path)
+      assert(EmbedStore.bandedRoutingStat(spark, base)._2.isEmpty)
+      EmbedStore.write(history, bb, bp,
+        geometry = operators.AnnPack.allContGeometry)
+      assert(EmbedStore.bandedRoutingStat(spark, bb) == ((1L, Seq(1))))
+      val viaBanded = verdictMap(
+        EmbedStore.dedupAgainstAuto(spark, bb, batch, tau))
+      assert(viaBanded == verdictMap(
+        EmbedStore.bandedDedupAgainst(spark, bb, batch, tau)))
+      // near-identical payloads collide w.p. ≈1: the routed probe
+      // still finds the planted dup, and misses nothing exact found
+      assert(viaBanded == viaDefault,
+        s"banded-routed verdicts diverged: $viaBanded vs $viaDefault")
+      assert(viaDefault(1L)._2 == 2L, s"planted dup missed: $viaDefault")
+    } finally { cleanup(base, path); cleanup(bb, bp) }
   }
 
-  test("dedupAgainstAuto(auto) routes PER LABEL off the FROZEN " +
+  test("dedupAgainstAuto routes PER LABEL off the FROZEN " +
       "continuum flag (r14): a continuum mega-label takes the banded " +
       "leg, a CLUSTERED mega-label and small labels keep the recall-1 " +
       "exact probe; unmeasured stores fall back to cell-count size") {
@@ -313,8 +326,9 @@ class EmbedStoreSpec extends GraftSpec {
     }
     def mix(a: Seq[Double], b: Seq[Double], eps: Double) =
       a.zip(b).map { case (x, y) => x + eps * y }
-    // conf-shrunk geometry: clamp = tcs·mc = 8, so 24-vector labels
-    // are mega (refined band) and the 2-vector label is small
+    // shrunk geometry frozen at write: clamp = cellSize·maxCells = 8,
+    // so 24-vector labels are mega (refined band) and the 2-vector
+    // label is small
     val continuum = embDf((0 until 24).map(i => // every vector its own direction
       (100L + i, 1, hv(1000L + i))))
     val clustered = embDf((0 until 24).map(i => // 3 tight clusters of 8
@@ -328,9 +342,7 @@ class EmbedStoreSpec extends GraftSpec {
       (7L, 9, hv(6000L))))                       // label the store never saw
     val (base, path) = freshBase()
     try {
-      spark.conf.set(graft.GraftConf.TargetCellSizeKey, "2")
-      spark.conf.set(graft.GraftConf.MaxCellsKey, "4")
-      EmbedStore.write(history, base, path)
+      EmbedStore.write(history, base, path, geometry = shrunk)
       // the build FROZE the routing statistic: continuum mega-label
       // true, clustered mega-label false, small false
       val cont = spark.table(s"${base}_bbits")
@@ -348,7 +360,6 @@ class EmbedStoreSpec extends GraftSpec {
         EmbedStore.dedupAgainst(spark, base, batch, tau))
       val banded = verdictMap(
         EmbedStore.bandedDedupAgainst(spark, base, batch, tau))
-      spark.conf.set(graft.GraftConf.RangeEngineKey, "auto")
       val auto = verdictMap(
         EmbedStore.dedupAgainstAuto(spark, base, batch, tau))
       assert(auto.keySet == exact.keySet,
@@ -369,12 +380,7 @@ class EmbedStoreSpec extends GraftSpec {
       assert(fb(1L) == banded(1L) && fb(3L) == banded(3L) &&
         fb(5L) == exact(5L),
         s"cont-less fallback did not route on cell saturation: $fb")
-    } finally {
-      spark.conf.unset(graft.GraftConf.TargetCellSizeKey)
-      spark.conf.unset(graft.GraftConf.MaxCellsKey)
-      spark.conf.unset(graft.GraftConf.RangeEngineKey)
-      cleanup(base, path)
-    }
+    } finally cleanup(base, path)
   }
 
   test("bandedRoutingStat (r16): the auto-probe peek collects only " +
@@ -396,9 +402,8 @@ class EmbedStoreSpec extends GraftSpec {
     val mega = embDf((0 until 24).map(i => (9000L + i, 99, hv(7000L + i))))
     val (base, path) = freshBase()
     try {
-      spark.conf.set(graft.GraftConf.TargetCellSizeKey, "2")
-      spark.conf.set(graft.GraftConf.MaxCellsKey, "4")
-      EmbedStore.write(smalls.unionByName(mega), base, path)
+      EmbedStore.write(smalls.unionByName(mega), base, path,
+        geometry = shrunk)
       EmbedStore.routingStatMemo.remove(base)
       val (nLabels, banded) = EmbedStore.bandedRoutingStat(spark, base)
       assert(nLabels == 41L)
@@ -420,94 +425,59 @@ class EmbedStoreSpec extends GraftSpec {
       assert(banded2 == Seq(99))
       assert(EmbedStore.routingStatMemo.get(base)._1 != entry._1,
         "append did not move the memo key")
-    } finally {
-      spark.conf.unset(graft.GraftConf.TargetCellSizeKey)
-      spark.conf.unset(graft.GraftConf.MaxCellsKey)
-      cleanup(base, path)
-    }
+    } finally cleanup(base, path)
   }
 
-  test("slim bands layout (r14): 1× payload instead of ×bands, same " +
-      "verdicts as inline across write/append/compact; the layout is " +
-      "frozen per store and a declared rebuild may change it") {
-    val history = embDf((0 until 20).map(i =>
-      (100L + i, 1 + i % 3, Seq(1.0, i / 20.0, (i % 4) / 4.0, 0.0))))
-    val appended = embDf((0 until 10).map(i =>
-      (300L + i, 1 + i % 3, Seq(0.0, 1.0, i / 10.0, 0.0))))
-    val batch = embDf(Seq(
-      (1L, 1, Seq(0.999, 0.05 / 20.0, 0.001, 0.0)),
-      (3L, 2, Seq(0.001, 0.999, 0.3 / 10.0, 0.0)),
-      (5L, 3, Seq(0.0, 0.0, 0.0, 1.0))))
-    val (ib, ip) = freshBase() // inline twin
-    val (sb, sp) = freshBase() // slim store
-    def banded(base: String) = verdictMap(
-      EmbedStore.bandedDedupAgainst(spark, base, batch, tau))
-    try {
-      EmbedStore.write(history, ib, ip)
-      EmbedStore.append(spark, ib, appended)
-      spark.conf.set(graft.GraftConf.BandStoreLayoutKey, "slim")
-      EmbedStore.write(history, sb, sp)
-      // slim schema: no inline payload on the keys table, one payload
-      // row per vector in _bvecs
-      assert(!spark.table(s"${sb}_bands").columns.contains("hv"))
-      assert(spark.table(s"${sb}_bvecs").count() == 20)
-      // the frozen layout survives a conf flip: appends follow the
-      // store, not the session
-      spark.conf.set(graft.GraftConf.BandStoreLayoutKey, "inline")
-      EmbedStore.append(spark, sb, appended)
-      assert(!spark.table(s"${sb}_bands").columns.contains("hv"),
-        "append re-introduced inline payload on a slim store")
-      assert(spark.table(s"${sb}_bvecs").count() == 30)
-      val inline = banded(ib)
-      assert(banded(sb) == inline,
-        "slim-layout verdicts diverged from the inline twin's")
-      // compact keeps the slim sidecars aligned and verdicts stable
-      EmbedStore.compact(spark, sb)
-      assert(banded(sb) == inline)
-      // production plan shape (AQE/broadcast off): BOTH store sides —
-      // the keys table AND the payload join-back — read their buckets
-      // in place, no exchange above either bucketed scan
-      locally {
-        import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-        import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-        import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-        val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-        try {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          val out = EmbedStore.bandedDedupAgainst(spark, sb, batch, tau)
-          assert(verdictMap(out) == inline)
-          def storeScan(p: SparkPlan) = p.collect {
-            case f: FileSourceScanExec if f.relation.bucketSpec.isDefined => f
-          }.nonEmpty
-          val plan = out.queryExecution.executedPlan
-          val storeSides = plan.collect { case j: SortMergeJoinExec => j }
-            .flatMap(j => Seq(j.left, j.right))
-            .filter(side => storeScan(side) &&
-              side.collect { case nj: SortMergeJoinExec => nj }.isEmpty)
-          assert(storeSides.size >= 2,
-            s"expected bands AND bvecs probes as in-place SMJ sides:\n$plan")
-          storeSides.foreach(side => assert(
-            side.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-            s"a slim store side re-shuffled:\n$side"))
-        } finally {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-          spark.conf.set("spark.sql.adaptive.enabled", prevA)
-        }
-      }
-      // a declared rebuild under the inline conf changes the layout
-      EmbedStore.rebuildBandedLeg(spark, sb)
-      assert(spark.table(s"${sb}_bands").columns.contains("hv"),
-        "rebuild under layout=inline must re-inline the payload")
-      assert(!spark.catalog.tableExists(s"${sb}_bvecs"),
-        "rebuild to inline must retire the payload sidecar")
-      assert(banded(sb) == inline)
-    } finally {
-      spark.conf.unset(graft.GraftConf.BandStoreLayoutKey)
-      cleanup(ib, ip)
-      cleanup(sb, sp)
+  test("the geometry is FROZEN at write: append and rebuildBandedLeg " +
+      "in a session that sets nothing keep an all-cont store routing " +
+      "every label banded, with a fresh write's verdicts") {
+    def hv(seed: Long): Seq[Double] = {
+      val raw = (0 until 64).map(j =>
+        (((seed * (j * 6364136223846793005L + 1442695040888963407L))
+          >>> 40) & 0xffL).toDouble - 127.5)
+      val n = math.sqrt(raw.map(x => x * x).sum)
+      raw.map(_ / n)
     }
+    def mix(a: Seq[Double], b: Seq[Double], eps: Double) =
+      a.zip(b).map { case (x, y) => x + eps * y }
+    // two labels of 12, past the all-cont clamp of 8 and far under the
+    // default one of 1536
+    val history = embDf((0 until 24).map(i =>
+      (100L + 2 * i, 1 + i % 2, hv(1000L + i))))
+    val appended = embDf((0 until 6).map(i =>
+      (300L + 2 * i, 1 + i % 2, hv(2000L + i))))
+    val batch = embDf(Seq(
+      (1L, 1, mix(hv(1000L), hv(5000L), 0.001)), // dup of h100
+      (3L, 2, mix(hv(2001L), hv(5001L), 0.001)), // dup of appended h302
+      (5L, 1, hv(6000L))))                       // matches nothing
+    val (base, path) = freshBase()
+    val (cb, cp) = freshBase() // fresh-write control
+    val g = operators.AnnPack.allContGeometry
+    def routedVerdicts(b: String) = verdictMap(
+      EmbedStore.dedupAgainstAuto(spark, b, batch, tau))
+    try {
+      EmbedStore.write(history, base, path, geometry = g)
+      EmbedStore.append(spark, base, appended)
+      EmbedStore.rebuildBandedLeg(spark, base)
+      assert(EmbedStore.geometryOf(spark, base) == g,
+        s"store geometry moved: ${EmbedStore.geometryOf(spark, base)}")
+      val cont = spark.table(s"${base}_bbits").select("cont").collect()
+        .map(_.getBoolean(0)).toSeq
+      assert(cont == Seq(true, true),
+        s"the rebuild re-measured cont off the store geometry: $cont")
+      val (nLabels, banded) = EmbedStore.bandedRoutingStat(spark, base)
+      assert(nLabels == 2L && banded.toSet == Set(1, 2),
+        s"a label left the banded route: $banded of $nLabels")
+      EmbedStore.write(history.unionByName(appended), cb, cp, geometry = g)
+      val fresh = routedVerdicts(cb)
+      assert(fresh == verdictMap(
+        EmbedStore.bandedDedupAgainst(spark, cb, batch, tau)))
+      assert(routedVerdicts(base) == fresh,
+        s"maintained store diverged from a fresh write: " +
+          s"${routedVerdicts(base)} vs $fresh")
+      assert(fresh(1L)._2 == 100L && fresh(3L)._2 == 302L &&
+        fresh(5L)._1 == 0L, s"planted dups not found: $fresh")
+    } finally { cleanup(base, path); cleanup(cb, cp) }
   }
 
   test("banded store bucket growth is per append GENERATION and " +
@@ -523,8 +493,8 @@ class EmbedStoreSpec extends GraftSpec {
       .groupBy(col("bkey")).count().agg(max(col("count")))
       .head.getLong(0)
     try {
-      spark.conf.set(graft.GraftConf.AnnBandMaxPerBucketKey, "4")
-      EmbedStore.write(nearDups(100 until 110), base, path)
+      EmbedStore.write(nearDups(100 until 110), base, path,
+        geometry = cap4)
       assert(maxBucket() <= 4, s"write-time cap broke: ${maxBucket()}")
       // three appends into the same hot bucket: each generation adds
       // its own ≤cap rows — the documented linear degradation
@@ -548,10 +518,7 @@ class EmbedStoreSpec extends GraftSpec {
         EmbedStore.bandedDedupAgainst(spark, base, probe, tau))(1L)
       assert(v._1 > 0 && v._2 == 100L,
         s"post-rebuild banded probe lost the planted dup: $v")
-    } finally {
-      spark.conf.unset(graft.GraftConf.AnnBandMaxPerBucketKey)
-      cleanup(base, path)
-    }
+    } finally cleanup(base, path)
   }
 
   test("banded leg: per-label bits FREEZE at first write — appends " +
@@ -651,12 +618,12 @@ class EmbedStoreSpec extends GraftSpec {
     def gens() = spark.table(s"${base}_bands")
       .select("bgen").distinct().collect().map(_.getInt(0)).toSet
     try {
-      spark.conf.set(graft.GraftConf.AnnBandMaxPerBucketKey, "4")
-      EmbedStore.write(nearDups(100 until 110), base, path)
+      EmbedStore.write(nearDups(100 until 110), base, path,
+        geometry = cap4)
       EmbedStore.append(spark, base, nearDups(200 until 210))
       EmbedStore.append(spark, base, nearDups(300 until 310))
       EmbedStore.append(spark, base, nearDups(400 until 410))
-      EmbedStore.write(all, cb, cp)
+      EmbedStore.write(all, cb, cp, geometry = cap4)
       val before = banded()
       val control = verdictMap(
         EmbedStore.bandedDedupAgainst(spark, cb, probe, tau))
@@ -688,7 +655,6 @@ class EmbedStoreSpec extends GraftSpec {
       } finally org.apache.spark.sql.GraftDatasetBridge
         .freeLocalCheckpoint(staged.bbits)
     } finally {
-      spark.conf.unset(graft.GraftConf.AnnBandMaxPerBucketKey)
       cleanup(base, path)
       cleanup(cb, cp)
     }

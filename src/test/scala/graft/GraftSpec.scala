@@ -11,13 +11,21 @@ abstract class GraftSpec extends AnyFunSuite {
 }
 
 object GraftSpec {
+  /** Threads (and shuffle partitions) of this JVM's session: build.sbt
+    * splits the machine's cores across its parallel test groups and
+    * passes each group its share, at least 4; a JVM started outside
+    * those groups runs local[4].
+    */
+  private val cores = sys.props.get("graft.test.cores").map(_.toInt)
+    .getOrElse(4)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
+      .master(s"local[$cores]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // build.sbt's parallel test groups put 6 such sessions on the
-      // box at once; a co-tenant stall that starves the local
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      // build.sbt's parallel test groups put several such sessions on
+      // the box at once; a co-tenant stall that starves the local
       // executor's heartbeat for >120 s must not kill a whole group's
       // JVM (measured: one group died exactly that way on a contended
       // host — "no recent heartbeats: 130102 ms exceeds 120000 ms")

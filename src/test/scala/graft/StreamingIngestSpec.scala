@@ -677,13 +677,13 @@ class StreamingIngestSpec extends GraftSpec {
       Seq("ingmt_fp", "ingmt_mh_bands", "ingmt_mh_shingles").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS $t"))
       Seq("ingmt_em", "ingmt_ref").foreach(b =>
-        Seq("cells", "lists", "bands", "bbits", "bvecs").foreach(s =>
+        Seq("cells", "lists", "bands", "bbits").foreach(s =>
           spark.sql(s"DROP TABLE IF EXISTS ${b}_$s")))
       Caches.deleteDir(tmp)
     }
   }
 
-  test("full ingest topology at rangeEngine=banded (r14): three " +
+  test("full ingest topology against an all-banded store (r14): three " +
       "micro-batches end-to-end yield the exact run's verdicts on " +
       "dup-regime plants; a replayed batch converges; the two stores " +
       "stay probe-equivalent") {
@@ -695,14 +695,21 @@ class StreamingIngestSpec extends GraftSpec {
     val novel = (1 to 40).map(i => s"n$i").mkString(" ")
     val tmp = Files.createTempDirectory("graft-ingest-banded").toString
     val seedDocs = Seq((2L, "seed history content")).toDF("doc_id", "text")
+    // the "b" store is written at the C14c all-cont geometry: its one
+    // label (0, every ingest row's label) is past that geometry's
+    // clamp of 8, so the build freezes cont = true and the ingest's
+    // routed probe takes the banded leg on every batch; the "e" twin's
+    // default geometry keeps the same history on the exact probe
     def mkStores(tag: String): Unit = {
       FingerprintStore.write(seedDocs, s"ingbd_fp_$tag", s"$tmp/fp_$tag")
       MinHashStore.write(seedDocs, s"ingbd_mh_$tag", s"$tmp/mh_$tag")
       SimHashStore.write(seedDocs, s"ingbd_sh_$tag", s"$tmp/sh_$tag")
       EmbedStore.write(
-        Seq((2L, 0, emb(0.0, 1.0, 0.0, 0.0)))
+        (1 to 10).map(i => (2L * i, 0, emb(0.0, 1.0, 0.001 * i, 0.0)))
           .toDF("vec_id", "label", "embedding"),
-        s"ingbd_em_$tag", s"$tmp/em_$tag")
+        s"ingbd_em_$tag", s"$tmp/em_$tag",
+        geometry = if (tag == "b") operators.AnnPack.allContGeometry
+          else operators.AnnPack.Geometry())
     }
     // dup-REGIME plants (cos ≈ 1 — the LSH contract's certain-collision
     // band) so banded and exact verdicts must agree row for row
@@ -744,9 +751,12 @@ class StreamingIngestSpec extends GraftSpec {
     try {
       mkStores("e")
       mkStores("b")
+      assert(EmbedStore.bandedRoutingStat(spark, "ingbd_em_b") ==
+          ((1L, Seq(0))) &&
+        EmbedStore.bandedRoutingStat(spark, "ingbd_em_e")._2.isEmpty,
+        "the all-cont store must route its label banded, the twin exact")
       val exactOut = runStream("e")
-      spark.conf.set(graft.GraftConf.RangeEngineKey, "banded")
-      try {
+      locally {
         val bandedOut = runStream("b")
         assert(exactOut.keySet == Set(0L, 1L, 2L) &&
           bandedOut.keySet == Set(0L, 1L, 2L),
@@ -774,7 +784,10 @@ class StreamingIngestSpec extends GraftSpec {
           "banded-run store diverged from the exact-run twin under probe")
         assert(probe("b").mkString.contains("41,1,11,"),
           s"the planted dup of 11 went unmatched: ${probe("b")}")
-      } finally spark.conf.unset(graft.GraftConf.RangeEngineKey)
+        // the appends kept the frozen routing: still all-banded
+        assert(EmbedStore.bandedRoutingStat(spark, "ingbd_em_b")._2 ==
+          Seq(0), "appends moved the store off its frozen routing")
+      }
     } finally {
       Seq("e", "b").foreach { t =>
         Seq(s"ingbd_fp_$t", s"ingbd_mh_${t}_bands",
@@ -787,11 +800,11 @@ class StreamingIngestSpec extends GraftSpec {
     }
   }
 
-  test("ingest topology at rangeEngine=auto against a MIXED store " +
+  test("ingest topology against a MIXED store " +
       "(r15): per-batch routing follows the frozen per-label cont " +
       "flags — continuum mega-label banded, clustered/small exact — " +
       "a fresh label appended mid-stream stays exact-routed, and every " +
-      "batch's verdicts match the exact-engine twin run") {
+      "batch's verdicts match the exact-routed twin run") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
     import graft.sources.{EmbedStore, SimHashStore}
@@ -809,6 +822,10 @@ class StreamingIngestSpec extends GraftSpec {
       a.zip(b).map { case (x, y) => (x + eps * y).toFloat }
     val tmp = Files.createTempDirectory("graft-ingest-auto").toString
     def text(tag: String) = (1 to 20).map(i => s"$tag$i").mkString(" ")
+    // the "a" store is written at a shrunk clamp (cellSize·maxCells =
+    // 8), so its 24-vector labels are mega and the build freezes mixed
+    // routing flags; the "x" twin's default clamp keeps every label on
+    // the exact probe
     def mkStores(tag: String): Unit = {
       val seedDocs = Seq((2L, "seed history content")).toDF("doc_id", "text")
       FingerprintStore.write(seedDocs, s"ingau_fp_$tag", s"$tmp/fp_$tag")
@@ -821,7 +838,10 @@ class StreamingIngestSpec extends GraftSpec {
       EmbedStore.write(
         (continuum ++ clustered ++ small)
           .toDF("vec_id", "label", "embedding"),
-        s"ingau_em_$tag", s"$tmp/em_$tag")
+        s"ingau_em_$tag", s"$tmp/em_$tag",
+        geometry = if (tag == "a")
+            operators.AnnPack.Geometry(cellSize = 2, maxCells = 4)
+          else operators.AnnPack.Geometry())
     }
     // dup-REGIME plants only (cos ≈ 1): banded and exact verdicts must
     // agree row for row, so the twin comparison is exact equality
@@ -858,10 +878,6 @@ class StreamingIngestSpec extends GraftSpec {
       out.toMap
     }
     try {
-      // conf-shrunk clamp (tcs·mc = 8) so 24-vector labels are mega;
-      // set BEFORE the writes — the build is what freezes the flags
-      spark.conf.set(graft.GraftConf.TargetCellSizeKey, "2")
-      spark.conf.set(graft.GraftConf.MaxCellsKey, "4")
       mkStores("x")
       mkStores("a")
       // the mixed store really is mixed: the routing flags the auto
@@ -871,9 +887,10 @@ class StreamingIngestSpec extends GraftSpec {
         .map(r => r.getInt(0) -> r.getBoolean(1)).toMap
       assert(cont == Map(1 -> true, 3 -> false, 2 -> false),
         s"frozen continuum flags wrong: $cont")
+      assert(EmbedStore.bandedRoutingStat(spark, "ingau_em_x")._2.isEmpty,
+        "the default-geometry twin must route every label exact")
       val exactOut = runStream("x")
-      spark.conf.set(graft.GraftConf.RangeEngineKey, "auto")
-      try {
+      locally {
         val autoOut = runStream("a")
         assert(exactOut.keySet == Set(0L, 1L, 2L) &&
           autoOut.keySet == Set(0L, 1L, 2L),
@@ -896,10 +913,8 @@ class StreamingIngestSpec extends GraftSpec {
         assert(cont7.length == 1 && !cont7.head.getBoolean(0),
           "a label appended mid-stream must stay exact-routed " +
             "(unmeasured, cont=false) until a declared rebuild")
-      } finally spark.conf.unset(graft.GraftConf.RangeEngineKey)
+      }
     } finally {
-      spark.conf.unset(graft.GraftConf.TargetCellSizeKey)
-      spark.conf.unset(graft.GraftConf.MaxCellsKey)
       Seq("x", "a").foreach { t =>
         Seq(s"ingau_fp_$t", s"ingau_mh_${t}_bands",
           s"ingau_mh_${t}_shingles", s"ingau_sh_$t",
