@@ -74,6 +74,34 @@ object Caches {
     }
   }
 
+  /** A registry-scoped memo of built on-disk artifacts (persisted index
+    * and shard directories): `memo(key)(build)` runs `build`, which
+    * returns the directory it wrote, at most once per key until the
+    * next [[releaseAll]], which deletes every built directory. The build
+    * runs under its key's own cell lock, never inside the map's
+    * `computeIfAbsent`: that would hold a map bin lock for the whole
+    * build, and a build that looks up another key of the same memo
+    * would throw `Recursive update`. A failed build leaves its key
+    * unbuilt, so the next caller retries it.
+    */
+  private[graft] final class DirMemo {
+    private final class Cell { @volatile var dir: String = null }
+    private val cells =
+      new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+    onRelease(() => {
+      cells.values.forEach(c => Option(c.dir).foreach(deleteDir))
+      cells.clear()
+    })
+
+    def apply(key: String)(build: => String): String = {
+      val c = cells.computeIfAbsent(key, _ => new Cell)
+      c.synchronized {
+        if (c.dir == null) c.dir = build
+        c.dir
+      }
+    }
+  }
+
   implicit class CachesSyntax(private val df: DataFrame) extends AnyVal {
     /** `.persistTracked` — fluent [[Caches.persist]]. */
     def persistTracked: DataFrame = Caches.persist(df)

@@ -7,6 +7,12 @@ package graft
   */
 object SysStat {
 
+  /** The core count a main sizes its local session with:
+    * SPARK_GRAFT_CPUS when set, else this machine's processor count.
+    */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** (cumulative steal jiffies, total jiffies) from /proc/stat's
     * aggregate cpu line; (-1, -1) where /proc/stat is absent.
     */

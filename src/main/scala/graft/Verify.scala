@@ -18,7 +18,7 @@ object Verify {
         sys.exit(2)
         throw new IllegalStateException("unreachable")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SysStat.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -58,6 +58,18 @@ object AnnPack extends QueryPack {
     pmod(pmod(vecId, lit(4096L)) * lit(2481L), lit(4096L))
   private val seedHashSql = "((vec_id % 4096) * 2481) % 4096"
 
+  /** The normed frame every ANN row and store reads: (vec_id, keep...,
+    * v, nrm) off a (vec_id, keep..., embedding) frame — the parquet
+    * floats widened to double (exact in both engines) and the norm
+    * computed once, so the in-query rows, [[graft.sources.AnnIndex]],
+    * [[graft.sources.PqStore]] and [[graft.sources.EmbedStore]] cannot
+    * drift apart on either.
+    */
+  private[graft] def normed(embs: DataFrame, keep: String*): DataFrame =
+    embs.select((col("vec_id") +: keep.map(col)) :+
+        Vectors.toDouble(col("embedding")).as("v"): _*)
+      .withColumn("nrm", Vectors.norm(col("v")))
+
   /** embeddings with double vectors + precomputed norms. Deliberately
     * NOT routed through Tables.parallelized (r16 measured): embeddings
     * is the smallest corpus table (2k rows at sf0.1), and the D-block's
@@ -69,10 +81,34 @@ object AnnPack extends QueryPack {
     * parallelized was sub-second to begin with.
     */
   private def vecs(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        Vectors.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Vectors.norm(col("v")))
+    normed(Tables.embeddings(s, d), "label")
+
+  /** Every 50th vector is a query; the rest are the corpus. */
+  private def isQuery: Column = pmod(col("vec_id"), lit(50)) === 0
+
+  /** A normed frame renamed to the query side: (query_id, qv, qn). */
+  private[graft] def asQueries(n: DataFrame): DataFrame =
+    n.select(col("vec_id").as("query_id"), col("v").as("qv"),
+      col("nrm").as("qn"))
+
+  /** The query slice, normed: (query_id, qv, qn). */
+  private def queryVecs(s: SparkSession, d: String): DataFrame =
+    asQueries(vecs(s, d).filter(isQuery))
+
+  /** The query slice as raw (vec_id, embedding) — what the persisted
+    * index rows ([[graft.sources.AnnIndex]], [[graft.sources.PqStore]])
+    * take as their search input.
+    */
+  private def querySet(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(isQuery)
+      .select(col("vec_id"), col("embedding"))
+
+  /** The corpus slice (every non-query vector) as raw (vec_id,
+    * embedding) — what the persisted index rows build their stores on.
+    */
+  private def corpusSet(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(!isQuery)
+      .select(col("vec_id"), col("embedding"))
 
   private[graft] val vecsSql: String =
     s"""e AS (SELECT vec_id, label,
@@ -107,10 +143,8 @@ object AnnPack extends QueryPack {
     "ann_brute",
     (s, d) => {
       val n = vecs(s, d)
-      val q = n.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val c = n.filter(pmod(col("vec_id"), lit(50)) =!= 0)
+      val q = asQueries(n.filter(isQuery))
+      val c = n.filter(!isQuery)
       val pairs = c.join(broadcast(q))
         .withColumn("cos_sim",
           Vectors.cosine(col("qv"), col("v"), col("qn"), col("nrm")))
@@ -145,33 +179,27 @@ object AnnPack extends QueryPack {
         s"ann_lsh's plane table is built for $lshDim-dim embeddings; " +
           s"this corpus has $dim — the mismatch would truncate " +
           s"signatures silently")
-      val planes = Vectors.planeWeights(numPlanes, lshDim)
       val n = vecs(s, d)
-      val sigBits = concat((0 until numPlanes).map { p =>
-        val pw = array(planes(p).map(lit): _*)
-        when(Vectors.dot(col("v"), pw) > 0.0, "1").otherwise("0")
-      }: _*)
       val bands = array((0 until numBands).map(b =>
         struct(lit(b).as("band"),
           substring(col("sigbits"), b * bandBits + 1, bandBits)
             .as("bkey"))): _*)
-      val banded = n.withColumn("sigbits", sigBits)
+      val banded = n.withColumn("sigbits", bandSigBits(lshDim, numPlanes))
         .select(col("vec_id"), explode(bands).as("bc"))
         .select(col("vec_id"), col("bc.band").as("band"),
           col("bc.bkey").as("bkey"))
-      val qb = banded.filter(pmod(col("vec_id"), lit(50)) === 0)
+      val qb = banded.filter(isQuery)
         .select(col("vec_id").as("query_id"), col("band").as("qband"),
           col("bkey").as("qbkey"))
-      val cb = banded.filter(pmod(col("vec_id"), lit(50)) =!= 0)
+      val cb = banded.filter(!isQuery)
       val cand = cb.join(qb,
           col("band") === col("qband") && col("bkey") === col("qbkey"))
         .select(col("query_id"), col("vec_id")).distinct()
       // only the QUERY slice is broadcast — the equi-join below would
       // filter non-queries anyway, but broadcasting the full corpus
       // would build a 50× bigger hash relation on every executor
-      val q = n.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("qid2"), col("v").as("qv"),
-          col("nrm").as("qn"))
+      val q = asQueries(n.filter(isQuery))
+        .withColumnRenamed("query_id", "qid2")
       val pairs = cand
         .join(n, "vec_id")
         .join(broadcast(q), col("query_id") === col("qid2"))
@@ -405,8 +433,36 @@ object AnnPack extends QueryPack {
     */
   private[graft] val boundEps = 2.5e-3
 
-  private[graft] def clampedAngle(cosCol: Column): Column =
-    acos(least(lit(1.0), greatest(lit(-1.0), cosCol)))
+  /** Angle between each row's vector `v` (norm `nrm`) and the centroid
+    * `cv` (norm `cnrm`) it is joined to, the cosine clamped to [−1, 1].
+    */
+  private def centroidAngle: Column =
+    acos(least(lit(1.0), greatest(lit(-1.0),
+      Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm")))))
+
+  /** Angular radius r of each cell over its members: the largest
+    * member-to-centroid angle, per `keys`, of members (keys..., v, nrm)
+    * joined to their centroids (keys..., cv, cnrm) — what makes
+    * [[ubProbe]]'s bound cover every member. (keys..., r).
+    */
+  private[graft] def cellRadii(members: DataFrame, cent: DataFrame,
+      keys: Seq[String]): DataFrame =
+    members.join(broadcast(cent), keys)
+      .withColumn("ang", centroidAngle)
+      .groupBy(keys.map(col): _*)
+      .agg(max(col("ang")).as("r"))
+
+  /** The exact-bound cell probe: rows of `probe` — a vector (v, nrm)
+    * joined to a cell (cv, cnrm, angular radius r) — kept where the
+    * cell's upper bound cos(max(0, angle(v, μ) − r)) + ε clears
+    * `threshold`: a per-row lower bound (the k-NN LB) or a constant τ.
+    * UB ≥ cos(v, x) for every member x, so no pair at or above the
+    * threshold is ever pruned. Adds the angle column `qang`.
+    */
+  private[graft] def ubProbe(probe: DataFrame, threshold: Column): DataFrame =
+    probe.withColumn("qang", centroidAngle)
+      .filter(cos(greatest(lit(0.0), col("qang") - col("r"))) +
+        lit(boundEps) >= threshold)
 
   /** The (label, cell) coarse structure shared by D3/C5/D6: one
     * recenter round over hash-ordered seeds per hierarchy level, then
@@ -480,14 +536,7 @@ object AnnPack extends QueryPack {
 
   private def recenterCells(assigned: DataFrame,
       keys: Seq[String]): DataFrame =
-    assigned
-      .select(keys.map(col) ++ Seq(col("cell"),
-        posexplode(col("v")).as(Seq("j", "x"))): _*)
-      .groupBy(keys.map(col) ++ Seq(col("cell"), col("j")): _*)
-      .agg(avg(col("x")).as("c"))
-      .groupBy(keys.map(col) :+ col("cell"): _*)
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
-        e => e.getField("c")).as("cv"))
+    centroidsOf(assigned, keys :+ "cell", mean = avg(_))
       .withColumn("cnrm", Vectors.norm(col("cv")))
 
   /** The full hierarchical build over an arbitrary normed frame
@@ -610,13 +659,8 @@ object AnnPack extends QueryPack {
       .persistTracked
     val (centR, lists) = leafCellStructure(lists1, g)
     // per-parent radius over the parent's final membership
-    val radii1 = lists1
-      .join(broadcast(cent1.withColumnRenamed("cell", "c1")),
-        Seq("label", "c1"))
-      .withColumn("ang", clampedAngle(
-        Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-      .groupBy(col("label"), col("c1"))
-      .agg(max(col("ang")).as("r"))
+    val radii1 = cellRadii(lists1, cent1.withColumnRenamed("cell", "c1"),
+      Seq("label", "c1"))
     val cent1R = cent1.withColumnRenamed("cell", "c1")
       .join(radii1, Seq("label", "c1"))
     CellIndex(Some(cent1R), centR, lists)
@@ -640,11 +684,7 @@ object AnnPack extends QueryPack {
     val cent = recenterCells(assignToCells(n, seeds), Seq("label"))
       .persistTracked
     val lists = assignToCells(n, cent).persistTracked
-    val radii = lists.join(broadcast(cent), Seq("label", "cell"))
-      .withColumn("ang", clampedAngle(
-        Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-      .groupBy(col("label"), col("cell"))
-      .agg(max(col("ang")).as("r"))
+    val radii = cellRadii(lists, cent, Seq("label", "cell"))
     val centR = cent.withColumn("c1", lit(1).cast(IntegerType))
       .join(radii, Seq("label", "cell"))
       .withColumnRenamed("cell", "c_cell")
@@ -678,28 +718,16 @@ object AnnPack extends QueryPack {
     val tcs = g.cellSize
     val mc = g.maxCells
     val keys = Seq("label", "c1")
-    // leaf count per parent, from the parent's ACTUAL
-    // membership (argmax assignment is not uniform)
-    val nC2 = lists1.groupBy(col("label"), col("c1"))
-      .agg(least(lit(mc.toLong),
-        greatest(lit(2L),
-          ceil(count(lit(1)) / lit(tcs.toDouble))))
-        .cast(IntegerType).as("n_cells"))
-    val seeds2 = seedCells(lists1, keys, nC2, mc)
     // a (keys..., cell, cv, cnrm) centroid table → the assignment +
     // angle-to-own-centroid frame the orphan split (and the adaptive
     // trigger) read
-    def assignWithAngles(cent: DataFrame): DataFrame =
-      assignToCells(lists1, cent, keys)
-        .join(broadcast(cent), keys :+ "cell")
-        .withColumn("ang", clampedAngle(
-          Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
+    def assignWithAngles(l: DataFrame, cent: DataFrame): DataFrame =
+      withAngles(l, cent, keys)
         .select(col("vec_id"), col("label"), col("c1"), col("cell"),
           col("v"), col("nrm"), col("ang"))
         .persistTracked
     // round 1 — always paid; this IS the audited one-round build
-    val cent0 = recenterCells(assignToCells(lists1, seeds2, keys), keys)
-      .persistTracked
+    val cent0 = round1Centroids(lists1, tcs, mc).persistTracked
     // CONTINUUM trigger, PER LABEL (r13b on the band; r14 at both call
     // sites): the round-1 assignment is needed regardless, so
     // materialize it WITH angles and peek each label's orphan fraction
@@ -721,12 +749,10 @@ object AnnPack extends QueryPack {
     // branch; homogeneous corpora get a single-branch plan with zero
     // dead stages. Recall stays 1 on EVERY branch (radii cover final
     // membership; the bound never depended on assignment quality).
-    val assigned1 = assignWithAngles(cent0)
+    val assigned1 = assignWithAngles(lists1, cent0)
     val maxFrac = g.orphanMaxFrac
     // one job materializes the persist AND reads every label's stat
-    val fracRows = assigned1.groupBy(col("label"))
-      .agg(avg(when(col("ang") > orphanRad, 1.0).otherwise(0.0))
-        .as("ofrac"))
+    val fracRows = assigned1.groupBy(col("label")).agg(orphanFrac)
       .collect()
     val refineLabels = fracRows.filter(_.getDouble(1) <= maxFrac)
       .map(_.get(0)).toSeq
@@ -741,14 +767,7 @@ object AnnPack extends QueryPack {
       for (_ <- 2 until leafLloydRounds)
         cent2 = recenterCells(assignToCells(l1, cent2, keys), keys)
       val cf = cent2.persistTracked
-      val assigned = assignToCells(l1, cf, keys)
-        .join(broadcast(cf), keys :+ "cell")
-        .withColumn("ang", clampedAngle(
-          Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-        .select(col("vec_id"), col("label"), col("c1"),
-          col("cell"), col("v"), col("nrm"), col("ang"))
-        .persistTracked
-      finishWithOrphans(assigned, cf, tcs, mc)
+      finishWithOrphans(assignWithAngles(l1, cf), cf, tcs, mc)
     }
     if (skipLabels.isEmpty) // all-clustered corpus
       return refined(assigned1, lists1)
@@ -832,12 +851,7 @@ object AnnPack extends QueryPack {
       .select(col("label"), col("c1"), leafId.as("cell"), col("cv"),
         col("cnrm"))
     // per-leaf angular radius w.r.t. the final leaf centroids
-    val radii = lists
-      .join(broadcast(centLeaf.drop("c1")), Seq("label", "cell"))
-      .withColumn("ang", clampedAngle(
-        Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-      .groupBy(col("label"), col("cell"))
-      .agg(max(col("ang")).as("r"))
+    val radii = cellRadii(lists, centLeaf.drop("c1"), Seq("label", "cell"))
     val centR = centLeaf.join(radii, Seq("label", "cell"))
       .withColumnRenamed("cell", "c_cell")
     (centR, lists)
@@ -876,23 +890,14 @@ object AnnPack extends QueryPack {
       .join(lb, col("vec_id") === col("lb_id"), "left")
       .withColumn("lbv", coalesce(col("lb"), lit(-2.0)))
     val probeBase = ci.cent1R match {
-      case Some(c1r) => withLb.join(broadcast(c1r), Seq("label"))
-        .withColumn("qang", clampedAngle(
-          Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-        .withColumn("ub",
-          cos(greatest(lit(0.0), col("qang") - col("r"))) + lit(boundEps))
-        .filter(col("ub") >= col("lbv"))
-        .select(col("vec_id"), col("label"), col("c1"), col("v"),
-          col("nrm"), col("lbv"))
-        .join(broadcast(ci.centR), Seq("label", "c1"))
+      case Some(c1r) =>
+        ubProbe(withLb.join(broadcast(c1r), Seq("label")), col("lbv"))
+          .select(col("vec_id"), col("label"), col("c1"), col("v"),
+            col("nrm"), col("lbv"))
+          .join(broadcast(ci.centR), Seq("label", "c1"))
       case None => withLb.join(broadcast(ci.centR), Seq("label"))
     }
-    val cand = probeBase
-      .withColumn("qang", clampedAngle(
-        Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-      .withColumn("ub",
-        cos(greatest(lit(0.0), col("qang") - col("r"))) + lit(boundEps))
-      .filter(col("ub") >= col("lbv"))
+    val cand = ubProbe(probeBase, col("lbv"))
       .select(col("vec_id"), col("label"), col("c_cell"),
         col("v").as("qv"), col("nrm").as("qn"))
     // 4. exact cosine on candidates — a (label, cell) equi-join
@@ -999,24 +1004,43 @@ object AnnPack extends QueryPack {
     */
   private[graft] def round1OrphanFracByLabel(n: DataFrame, tcs: Int,
       mc: Int): Array[org.apache.spark.sql.Row] = {
-    val keys = Seq("label", "c1")
     val lists1 = n.select(col("vec_id"), col("label"),
       lit(1).cast(IntegerType).as("c1"), col("v"), col("nrm"))
-    val nC2 = lists1.groupBy(col("label"), col("c1"))
+    withAngles(lists1, round1Centroids(lists1, tcs, mc), Seq("label", "c1"))
+      .groupBy(col("label")).agg(orphanFrac)
+      .collect()
+  }
+
+  /** Round 1 of the leaf build over a parent-keyed frame (vec_id,
+    * label, c1, v, nrm): hash-ordered seeds, one assign + recenter.
+    * The leaf count per parent comes from the parent's ACTUAL
+    * membership (argmax assignment is not uniform).
+    */
+  private def round1Centroids(lists1: DataFrame, tcs: Int,
+      mc: Int): DataFrame = {
+    val keys = Seq("label", "c1")
+    val nC2 = lists1.groupBy(keys.map(col): _*)
       .agg(least(lit(mc.toLong),
         greatest(lit(2L), ceil(count(lit(1)) / lit(tcs.toDouble))))
         .cast(IntegerType).as("n_cells"))
-    val cent0 = recenterCells(
+    recenterCells(
       assignToCells(lists1, seedCells(lists1, keys, nC2, mc), keys), keys)
-    assignToCells(lists1, cent0, keys)
-      .join(broadcast(cent0), keys :+ "cell")
-      .withColumn("ang", clampedAngle(
-        Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-      .groupBy(col("label"))
-      .agg(avg(when(col("ang") > orphanRad, 1.0).otherwise(0.0))
-        .as("ofrac"))
-      .collect()
   }
+
+  /** `l` assigned to its nearest of `cent`'s cells (per `keys`), with
+    * the angle `ang` to that cell's centroid.
+    */
+  private def withAngles(l: DataFrame, cent: DataFrame,
+      keys: Seq[String]): DataFrame =
+    assignToCells(l, cent, keys)
+      .join(broadcast(cent), keys :+ "cell")
+      .withColumn("ang", centroidAngle)
+
+  /** Per-group fraction of members further than [[orphanRad]] from
+    * their centroid, over an angle-carrying assignment.
+    */
+  private def orphanFrac: Column =
+    avg(when(col("ang") > orphanRad, 1.0).otherwise(0.0)).as("ofrac")
 
   /** A driver-decided label set re-injected as a one-column DataFrame
     * (r15 — the r14 verdict's task 1): the per-label routing peeks are
@@ -1074,25 +1098,16 @@ object AnnPack extends QueryPack {
     // the parent's final membership): parents whose UB clears τ first,
     // then only the survivors' leaves
     val probeBase = ci.cent1R match {
-      case Some(c1r) => ci.lists.drop("cell")
-        .join(broadcast(c1r), Seq("label"))
-        .withColumn("qang", clampedAngle(
-          Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-        .withColumn("ub",
-          cos(greatest(lit(0.0), col("qang") - col("r"))) + lit(boundEps))
-        .filter(col("ub") >= tau)
-        .select(col("vec_id"), col("label"), col("c1"), col("v"),
-          col("nrm"))
-        .join(broadcast(ci.centR), Seq("label", "c1"))
+      case Some(c1r) =>
+        ubProbe(ci.lists.drop("cell").join(broadcast(c1r), Seq("label")),
+            lit(tau))
+          .select(col("vec_id"), col("label"), col("c1"), col("v"),
+            col("nrm"))
+          .join(broadcast(ci.centR), Seq("label", "c1"))
       case None => ci.lists.drop("cell")
         .join(broadcast(ci.centR), Seq("label"))
     }
-    val probes = probeBase
-      .withColumn("qang", clampedAngle(
-        Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-      .withColumn("ub",
-        cos(greatest(lit(0.0), col("qang") - col("r"))) + lit(boundEps))
-      .filter(col("ub") >= tau)
+    val probes = ubProbe(probeBase, lit(tau))
       .select(col("vec_id"), col("label"), col("c_cell"),
         col("v").as("qv"), col("nrm").as("qn"))
     probes
@@ -1246,6 +1261,37 @@ object AnnPack extends QueryPack {
       "IF(substring(key0, f, 1) = '1', '0', '1'), " +
       s"substring(key0, f + 1, $maxBits))))")
 
+  /** Signatures of a normed frame (vec_id, label, v, nrm) of
+    * `dim`-wide vectors under a per-label (label, bits) width table —
+    * the one signature step the in-query banded engine, the store's
+    * index side and the store's probe side share. Labels `bits` does
+    * not carry drop at its inner join.
+    */
+  private[graft] def bandSigs(n: DataFrame, bits: DataFrame, dim: Int,
+      numBands: Int, maxBits: Int): DataFrame =
+    n.withColumn("v", bandDimGuard(dim))
+      .withColumn("sigbits", bandSigBits(dim, numBands * maxBits))
+      .join(broadcast(bits.select(col("label"), col("bits"))),
+        Seq("label"))
+
+  /** Index side: every signature row once per band, with that band's
+    * exact key as (band, key); the signature row's columns ride along.
+    */
+  private[graft] def bandKeysOf(sigs: DataFrame, numBands: Int,
+      maxBits: Int): DataFrame =
+    sigs.select(col("*"), inline(bandKeyCols(numBands, maxBits)))
+
+  /** Probe side: (vec_id, label, band, key) for each band's exact key
+    * plus one single-bit flip per used bit.
+    */
+  private[graft] def bandProbesOf(sigs: DataFrame, numBands: Int,
+      maxBits: Int): DataFrame =
+    bandKeysOf(sigs, numBands, maxBits)
+      .select(col("vec_id"), col("label"), col("band"), col("bits"),
+        col("key").as("key0"))
+      .select(col("vec_id"), col("label"), col("band"),
+        explode(bandProbeKeys(maxBits)).as("key"))
+
   /** The banded candidate pairs over a normed frame (vec_id, label, v,
     * nrm) of `dim`-dimensional vectors: (vec_id, nn_id, label, qv, qn,
     * vb, nrmb) — same shape as [[rangeCandidatesOf]] so the scale
@@ -1260,28 +1306,15 @@ object AnnPack extends QueryPack {
     // signatures fan into the probe explode, the index explode, and
     // both vector join-backs — persist once (the 128-dot projection is
     // the frame's one corpus-scale map)
-    val sigs = n.withColumn("v", bandDimGuard(dim))
-      .withColumn("sigbits", bandSigBits(dim, numBands * maxBits))
-      .join(broadcast(bits), Seq("label"))
-      .persistTracked
-    val bandKeys = bandKeyCols(numBands, maxBits)
-    val idx0 = sigs
-      .select(col("vec_id").as("nn_id"), col("label"),
-        explode(bandKeys).as("bk"))
-      .select(col("nn_id"), col("label"), col("bk.band").as("band"),
-        col("bk.key").as("key"))
+    val sigs = bandSigs(n, bits, dim, numBands, maxBits).persistTracked
+    val idx0 = bandKeysOf(sigs, numBands, maxBits)
+      .select(col("vec_id").as("nn_id"), col("label"), col("band"),
+        col("key"))
     val idx = if (cap == Int.MaxValue) idx0
       else graft.plans.TopKPerKey(idx0,
         Seq(col("label"), col("band"), col("key")),
         Seq(col("nn_id").asc), cap)
-    // probe side: the exact key (f = 0) plus one flip per used bit
-    val probe = sigs
-      .select(col("vec_id"), col("label"), col("bits"),
-        explode(bandKeys).as("bk"))
-      .select(col("vec_id"), col("label"), col("bits"),
-        col("bk.band").as("band"), col("bk.key").as("key0"))
-      .select(col("vec_id"), col("label"), col("band"),
-        explode(bandProbeKeys(maxBits)).as("key"))
+    val probe = bandProbesOf(sigs, numBands, maxBits)
     val cand = probe.join(idx, Seq("label", "band", "key"))
       .filter(col("vec_id") < col("nn_id"))
       .select(col("vec_id"), col("nn_id"), col("label"))
@@ -1402,20 +1435,10 @@ object AnnPack extends QueryPack {
     "ann_ivf",
     (s, d) => {
       val n = vecs(s, d)
-      // centroids: per label, per-dim mean via exact decimal sums (the
-      // double sum would be partition-order dependent)
-      val dims = n.select(col("label"),
-          posexplode(col("v")).as(Seq("j", "x")))
-      val cent = dims.groupBy(col("label"), col("j"))
-        .agg((sum(col("x").cast(DecimalType(28, 12))).cast(DoubleType) /
-          count(lit(1))).as("c"))
-        .groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
-          e => e.getField("c")).as("cv"))
+      // centroids: per label, per-dim exact-decimal mean
+      val cent = centroidsOf(n, Seq("label"))
         .withColumn("cnrm", Vectors.norm(col("cv")))
-      val q = n.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
+      val q = asQueries(n.filter(isQuery))
       // probe the top-nprobe cells per query by centroid cosine
       val wProbe = Window.partitionBy(col("query_id"))
         .orderBy(col("ccos").desc, col("label"))
@@ -1426,7 +1449,7 @@ object AnnPack extends QueryPack {
         .filter(col("pr") <= nprobe)
         .select(col("query_id"), col("qv"), col("qn"), col("label"))
       // exact search only inside the probed lists
-      val c = n.filter(pmod(col("vec_id"), lit(50)) =!= 0)
+      val c = n.filter(!isQuery)
       val pairs = c.join(broadcast(probed), Seq("label"))
         .withColumn("cos_sim",
           Vectors.cosine(col("qv"), col("v"), col("qn"), col("nrm")))
@@ -1477,37 +1500,82 @@ object AnnPack extends QueryPack {
   private val kmK = 8
   private val kmIters = 2
 
-  /** Corpus frame for the k-means paths: (vec_id, v, nrm, vv). */
-  private[graft] def kmCorpus(n: DataFrame): DataFrame =
-    n.withColumn("vv", Vectors.dot(col("v"), col("v")))
+  /** Per-group centroids of the `v`-named vectors in `assigned`:
+    * (keys..., cv) with cv[j] = `mean` of the group's j-th components —
+    * the one recenter spelling under the k-means, PQ and label-mean
+    * quantizers ([[exactMean]]) and the exact-bound cell builds (`avg`,
+    * whose bounds hold for any centroid).
+    */
+  private[graft] def centroidsOf(assigned: DataFrame, keys: Seq[String],
+      v: String = "v", mean: Column => Column = exactMean): DataFrame =
+    assigned
+      .select(keys.map(col) :+ posexplode(col(v)).as(Seq("j", "x")): _*)
+      .groupBy(keys.map(col) :+ col("j"): _*)
+      .agg(mean(col("x")).as("c"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
+        e => e.getField("c")).as("cv"))
+
+  /** Per-dimension mean through exact decimal sums: a double sum would
+    * depend on partition order, and the oracle sums in DECIMAL(28,12).
+    */
+  private def exactMean(x: Column): Column =
+    sum(x.cast(DecimalType(28, 12))).cast(DoubleType) / count(lit(1))
+
+  /** The column names one Lloyd quantizer runs over: points carry
+    * (vec_id, keys..., v, vv = v·v), centroids (keys..., id, cv, cc =
+    * cv·cv); `keys` groups independent quantizers trained in one plan.
+    */
+  private case class LloydSpace(keys: Seq[String], id: String,
+      v: String, vv: String)
+
+  /** The k-means coarse quantizer's space: one group, cells `cell`. */
+  private val coarse = LloydSpace(Nil, "cell", "v", "vv")
 
   /** Argmin-centroid assignment via a min_by-struct aggregation —
     * map-side combinable (partial argmin per partition, merge of
     * K-sized states), unlike a row_number window over n×K rows. The
-    * struct ordering (dist2, cell) reproduces the oracle's ROW_NUMBER
-    * tiebreak exactly: dist2 is the identical IEEE sequence in both
-    * engines, so the selected cell hash-matches.
+    * struct ordering (dist2, id) reproduces the oracle's ROW_NUMBER
+    * tiebreak exactly: dist2 = vv + cc − 2·v·cv is the identical IEEE
+    * sequence in both engines, so the selected id hash-matches.
+    * Returns (vec_id, keys..., id, v).
     */
-  private[graft] def kmAssign(corpus: DataFrame, cent: DataFrame): DataFrame =
-    corpus.crossJoin(broadcast(cent))
-      .withColumn("dist2",
-        col("vv") + col("cc") - lit(2.0d) * Vectors.dot(col("v"), col("cv")))
-      .groupBy(col("vec_id"))
+  private def lloydAssign(pts: DataFrame, cent: DataFrame,
+      sp: LloydSpace): DataFrame =
+    pts.join(broadcast(cent), sp.keys) // no keys: every centroid
+      .withColumn("dist2", col(sp.vv) + col("cc") -
+        lit(2.0d) * Vectors.dot(col(sp.v), col("cv")))
+      .groupBy(col("vec_id") +: sp.keys.map(col): _*)
       .agg(
-        min_by(col("cell"),
-          struct(col("dist2").as("d"), col("cell").as("c"))).as("cell"),
-        first(col("v")).as("v"))
+        min_by(col(sp.id),
+          struct(col("dist2").as("d"), col(sp.id).as("c"))).as(sp.id),
+        first(col(sp.v)).as(sp.v))
 
-  private def kmRecenter(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cell"), posexplode(col("v")).as(Seq("j", "x")))
-      .groupBy(col("cell"), col("j"))
-      .agg((sum(col("x").cast(DecimalType(28, 12))).cast(DoubleType) /
-        count(lit(1))).as("c"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
-        e => e.getField("c")).as("cv"))
-      .withColumn("cc", Vectors.dot(col("cv"), col("cv")))
+  /** `iters` unrolled Lloyd rounds from `seeds` (keys..., id, cv, cc):
+    * assign, then exact-decimal recenter. Returns (keys..., id, cv, cc).
+    */
+  private def lloyd(pts: DataFrame, seeds: DataFrame, iters: Int,
+      sp: LloydSpace): DataFrame =
+    (1 to iters).foldLeft(seeds) { (c, _) =>
+      centroidsOf(lloydAssign(pts, c, sp), sp.keys :+ sp.id, sp.v)
+        .withColumn("cc", Vectors.dot(col("cv"), col("cv")))
+    }
+
+  /** Corpus frame for the k-means paths: (vec_id, v, nrm, vv). */
+  private[graft] def kmCorpus(n: DataFrame): DataFrame =
+    n.withColumn("vv", Vectors.dot(col("v"), col("v")))
+
+  /** Nearest coarse cell per corpus vector: (vec_id, cell, v). */
+  private def kmAssign(corpus: DataFrame, cent: DataFrame): DataFrame =
+    lloydAssign(corpus, cent, coarse)
+
+  /** IVF postings of a normed frame (vec_id, v, nrm): every vector
+    * routed to its nearest centroid, (vec_id, v, nrm, cell).
+    */
+  private[graft] def ivfPostings(n: DataFrame, cent: DataFrame): DataFrame =
+    kmAssign(kmCorpus(n), cent)
+      .join(n.select(col("vec_id"), col("nrm")), "vec_id")
+      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
 
   /** Deterministic k-means coarse quantizer: hash-ordered seed pick,
     * `iters` unrolled Lloyd rounds. Returns (cell, cv, cc).
@@ -1520,22 +1588,38 @@ object AnnPack extends QueryPack {
       .limit(k)
       .select(col("vec_id").as("cell"), col("v").as("cv"))
       .withColumn("cc", Vectors.dot(col("cv"), col("cv")))
-    (1 to iters).foldLeft(seeds: DataFrame) {
-      (c, _) => kmRecenter(kmAssign(corpus, c))
-    }
+    lloyd(corpus, seeds, iters, coarse)
   }
 
-  /** nprobe nearest cells per query: (query_id, qv, qn, cell). */
+  /** nprobe nearest cells per query (query_id, qv, qn):
+    * (query_id, qv, qn, cell).
+    */
   private[graft] def kmProbe(q: DataFrame, cent: DataFrame,
       probes: Int = nprobe): DataFrame = {
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("dist2"), col("cell"))
-    q.crossJoin(broadcast(cent))
+    q.withColumn("qq", Vectors.dot(col("qv"), col("qv")))
+      .crossJoin(broadcast(cent))
       .withColumn("dist2",
         col("qq") + col("cc") - lit(2.0d) * Vectors.dot(col("qv"), col("cv")))
       .withColumn("pr", row_number().over(wProbe))
       .filter(col("pr") <= probes)
       .select(col("query_id"), col("qv"), col("qn"), col("cell"))
+  }
+
+  /** The IVF re-rank tail: exact cosine of each probed query against
+    * the postings (vec_id, cell, v, nrm) of its probed cells, top-k per
+    * query — shared by `ann_ivf_kmeans` and [[graft.sources.AnnIndex]]
+    * (query_id, rank, vec_id, cos_sim, cell).
+    */
+  private[graft] def ivfRerank(lists: DataFrame, probed: DataFrame,
+      k: Int): DataFrame = {
+    val pairs = lists.join(broadcast(probed), Seq("cell"))
+      .withColumn("cos_sim",
+        Vectors.cosine(col("qv"), col("v"), col("qn"), col("nrm")))
+      .select(col("query_id"), col("vec_id"), col("cell"), col("cos_sim"))
+    topKPerQuery(pairs, k, Seq("cell"))
+      .orderBy(col("query_id"), col("rank"))
   }
 
   /** D5's oracle — shared verbatim by `ann_index_search` (D9), and,
@@ -1624,26 +1708,15 @@ object AnnPack extends QueryPack {
     "ann_ivf_kmeans",
     (s, d) => {
       val n = vecs(s, d)
-      val corpus = kmCorpus(n.filter(pmod(col("vec_id"), lit(50)) =!= 0))
+      val c = n.filter(!isQuery)
       // kmK rows, but the plan behind them is two full Lloyd rounds
       // over the corpus, and cent feeds BOTH the list assignment and
       // the probe ranking — persist so the quantizer trains once per
       // session (the D9 index write is this same materialize-the-
       // quantizer pattern, persisted to parquet instead)
-      val cent = kmCentroids(corpus).persistTracked
-      val lists = kmAssign(corpus, cent)
-      val q = n.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-        .withColumn("qq", Vectors.dot(col("qv"), col("qv")))
-      val probed = kmProbe(q, cent)
-      val pairs = lists.join(n.select(col("vec_id"), col("nrm")), "vec_id")
-        .join(broadcast(probed), Seq("cell"))
-        .withColumn("cos_sim",
-          Vectors.cosine(col("qv"), col("v"), col("qn"), col("nrm")))
-        .select(col("query_id"), col("vec_id"), col("cell"), col("cos_sim"))
-      topKPerQuery(pairs, K, Seq("cell"))
-        .orderBy(col("query_id"), col("rank"))
+      val cent = kmCentroids(kmCorpus(c)).persistTracked
+      ivfRerank(ivfPostings(c, cent),
+        kmProbe(asQueries(n.filter(isQuery)), cent), K)
     },
     Some(kmeansOracle("TRUE")))
 
@@ -1705,12 +1778,18 @@ object AnnPack extends QueryPack {
     * with the cache registry ([[graft.Caches.releaseAll]]), the same
     * invalidation contract as every registry-scoped memo.
     */
-  private val indexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  graft.Caches.onRelease(() => {
-    indexDirs.values.forEach(graft.Caches.deleteDir(_))
-    indexDirs.clear()
-  })
+  private val indexDirs = new graft.Caches.DirMemo
+
+  /** A D9 gate row: search the store `store` builds (once per JVM ×
+    * dataset) with the query slice; the oracle is D5's, trained on the
+    * `trainPred` subset of the corpus.
+    */
+  private def annIndexRow(name: String, trainPred: String)(
+      store: (SparkSession, String) => String): GraftQuery =
+    GraftQuery(name,
+      (s, d) => graft.sources.AnnIndex.search(s, store(s, d),
+        querySet(s, d), k = K, nprobe = nprobe),
+      Some(kmeansOracle(trainPred)))
 
   // D9 through the driver gate — the cf_parse_config pattern: the
   // artifact-driven path (train + persist the IVF index, then SEARCH the
@@ -1718,35 +1797,15 @@ object AnnPack extends QueryPack {
   // in-query D5 oracle, proving the persisted index IS the
   // oracle-verified quantizer. The index builds once per (JVM, dataset);
   // repeat invocations only search.
-  private val annIndexSearch = GraftQuery(
-    "ann_index_search",
-    (s, d) => {
-      val path = indexDirs.computeIfAbsent(d, _ => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_ann_index").toString
-        graft.sources.AnnIndex.write(
-          Tables.embeddings(s, d)
-            .filter(pmod(col("vec_id"), lit(50)) =!= 0)
-            .select(col("vec_id"), col("embedding")),
-          dir, k = kmK, iters = kmIters)
-        dir
-      })
-      graft.sources.AnnIndex.search(s, path,
-        Tables.embeddings(s, d)
-          .filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select(col("vec_id"), col("embedding")),
-        k = K, nprobe = nprobe)
-    },
-    Some(kmeansOracle("TRUE")))
-
-  /** The 91%-train slice shared by the append/compact/rebuild D9 gate
-    * rows — one spelling so the three stores' base content is
-    * constructed identically.
-    */
-  private def annIndexMaintCorpus(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .filter(pmod(col("vec_id"), lit(50)) =!= 0)
-      .select(col("vec_id"), col("embedding"))
+  private val annIndexSearch = annIndexRow("ann_index_search", "TRUE") {
+    (s, d) => indexDirs(d) {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_ann_index").toString
+      graft.sources.AnnIndex.write(corpusSet(s, d), dir,
+        k = kmK, iters = kmIters)
+      dir
+    }
+  }
 
   /** The append row's finished store (write 91%-of-91% + append the
     * held-out slice), built once per (JVM, dataset) — ALSO the shared
@@ -1762,17 +1821,17 @@ object AnnPack extends QueryPack {
     * from-scratch build.
     */
   private def annAppendStore(s: SparkSession, d: String): String =
-    indexDirs.computeIfAbsent(s"$d#append", _ => {
+    indexDirs(s"$d#append") {
       val dir = java.nio.file.Files
         .createTempDirectory("graft_ann_index_app").toString
-      val corpus = annIndexMaintCorpus(s, d)
+      val corpus = corpusSet(s, d)
       graft.sources.AnnIndex.write(
         corpus.filter(pmod(col("vec_id"), lit(11)) =!= 5),
         dir, k = kmK, iters = kmIters)
       graft.sources.AnnIndex.append(s, dir,
         corpus.filter(pmod(col("vec_id"), lit(11)) === 5))
       dir
-    })
+    }
 
   /** Recursive file clone of a store directory (parquet + markers) —
     * the maintenance rows' base-prefix reuse. Plain JVM I/O: the dirs
@@ -1800,20 +1859,12 @@ object AnnPack extends QueryPack {
     * row's base store plus `tail` — see [[annAppendStore]].
     */
   private def maintStoreFrom(s: SparkSession, d: String, key: String,
-      prefix: String)(tail: String => Unit): String = {
-    // the base-store lookup is hoisted OUT of the computeIfAbsent body
-    // (its own computeIfAbsent on the same map would be a recursive
-    // update); computeIfAbsent itself is the memo discipline every
-    // sibling uses — the previous get/put pair let two concurrent
-    // callers both clone and build, leaking the loser's temp store
-    // directory outside the Caches release hook (r16 ADVICE)
-    val base = annAppendStore(s, d)
-    indexDirs.computeIfAbsent(s"$d#$key", _ => {
-      val dir = cloneStoreDir(base, prefix)
+      prefix: String)(tail: String => Unit): String =
+    indexDirs(s"$d#$key") {
+      val dir = cloneStoreDir(annAppendStore(s, d), prefix)
       tail(dir)
       dir
-    })
-  }
+    }
 
   // D9's APPEND path through the driver gate: train + persist the index
   // on ~91% of the corpus, APPEND the held-out slice (routed to the
@@ -1821,17 +1872,9 @@ object AnnPack extends QueryPack {
   // trains on the same reduced set but assigns the full corpus, which
   // is precisely the write+append contract — a hash match proves
   // appended vectors are searchable exactly as if routed at build time.
-  private val annIndexAppendSearch = GraftQuery(
-    "ann_index_append_search",
-    (s, d) => {
-      val path = annAppendStore(s, d)
-      graft.sources.AnnIndex.search(s, path,
-        Tables.embeddings(s, d)
-          .filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select(col("vec_id"), col("embedding")),
-        k = K, nprobe = nprobe)
-    },
-    Some(kmeansOracle("vec_id % 11 <> 5")))
+  private val annIndexAppendSearch =
+    annIndexRow("ann_index_append_search", "vec_id % 11 <> 5")(
+      annAppendStore)
 
   // D9's COMPACT path through the driver gate (r16 — the r15 verdict's
   // task 1): write + append + a REPLAYED append (duplicate postings
@@ -1841,26 +1884,19 @@ object AnnPack extends QueryPack {
   // match proves search is byte-stable across compaction, replay
   // duplicates included (they survive compact as rows and collapse at
   // read, the family-wide convergence contract).
-  private val annIndexCompactSearch = GraftQuery(
-    "ann_index_compact_search",
-    (s, d) => {
+  private val annIndexCompactSearch =
+    annIndexRow("ann_index_compact_search", "vec_id % 11 <> 5") {
       // clone of the append row's (write + append) base — identical
       // rows, see annAppendStore — plus THIS row's tail: the replayed
       // append (the crash shape) and the compaction under test
-      val path = maintStoreFrom(s, d, "compact", "graft_ann_index_cmp") {
+      (s, d) => maintStoreFrom(s, d, "compact", "graft_ann_index_cmp") {
         dir =>
-          val slice = annIndexMaintCorpus(s, d)
+          val slice = corpusSet(s, d)
             .filter(pmod(col("vec_id"), lit(11)) === 5)
           graft.sources.AnnIndex.append(s, dir, slice) // crash replay
           graft.sources.AnnIndex.compact(s, dir)
       }
-      graft.sources.AnnIndex.search(s, path,
-        Tables.embeddings(s, d)
-          .filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select(col("vec_id"), col("embedding")),
-        k = K, nprobe = nprobe)
-    },
-    Some(kmeansOracle("vec_id % 11 <> 5")))
+    }
 
   // D9's REBUILD path through the driver gate: write on ~91%, append
   // the rest, then a declared quantizer rebuild — retrain on the
@@ -1869,22 +1905,15 @@ object AnnPack extends QueryPack {
   // row's): a hash match proves rebuild ≡ a fresh write() of the
   // deduplicated corpus — the family-wide rebuild contract, here
   // end-to-end through the persisted store.
-  private val annIndexRebuildSearch = GraftQuery(
-    "ann_index_rebuild_search",
-    (s, d) => {
+  private val annIndexRebuildSearch =
+    annIndexRow("ann_index_rebuild_search", "TRUE") {
       // clone of the append row's (write + append) base — identical
       // rows, see annAppendStore — plus the declared rebuild under test
-      val path = maintStoreFrom(s, d, "rebuild", "graft_ann_index_rb") {
+      (s, d) => maintStoreFrom(s, d, "rebuild", "graft_ann_index_rb") {
         dir =>
           graft.sources.AnnIndex.rebuild(s, dir, k = kmK, iters = kmIters)
       }
-      graft.sources.AnnIndex.search(s, path,
-        Tables.embeddings(s, d)
-          .filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select(col("vec_id"), col("embedding")),
-        k = K, nprobe = nprobe)
-    },
-    Some(kmeansOracle("TRUE")))
+    }
 
   // D7 — int8 symmetric quantization of the embedding column: the
   // standard 4x memory/bandwidth cut for the vector working set before
@@ -1898,16 +1927,8 @@ object AnnPack extends QueryPack {
   // tie direction for negatives, floor+0.5 cannot). The md5 over the
   // quantized codes proves byte-identical quantization end-to-end;
   // q_l1/q_max/q_min are exact integer summaries.
-  private[graft] def quantizeOver(embs: DataFrame): DataFrame = {
-    val x = Vectors.toDouble(col("embedding"))
-    val base = embs
-      .select(col("vec_id"), x.as("x"))
-      .withColumn("amax", array_max(transform(col("x"), v => abs(v))))
-      .filter(col("amax") > 0)
-    val scale = lit(127.0) / col("amax")
-    val q = transform(col("x"), v =>
-      greatest(lit(-127L), least(lit(127L), floor(v * scale + 0.5))))
-    base.select(col("vec_id"), col("amax"), q.as("q"))
+  private[graft] def quantizeOver(embs: DataFrame): DataFrame =
+    int8Coded(normed(embs))
       .select(
         col("vec_id"),
         col("amax"),
@@ -1917,7 +1938,18 @@ object AnnPack extends QueryPack {
         array_max(col("q")).as("q_max"),
         array_min(col("q")).as("q_min"))
       .orderBy(col("vec_id"))
-  }
+
+  /** int8 symmetric codes of a normed frame's `v`: rows with a nonzero
+    * vector gain `amax` = max |x| and `q` = the codes
+    * clamp(floor(x · 127/amax + 0.5), ±127) as bigints — the one code
+    * spelling under D7's md5 pin and D8's code-space search.
+    */
+  private def int8Coded(n: DataFrame): DataFrame =
+    n.withColumn("amax", array_max(transform(col("v"), x => abs(x))))
+      .filter(col("amax") > 0)
+      .withColumn("q", transform(col("v"), x =>
+        greatest(lit(-127L), least(lit(127L),
+          floor(x * (lit(127.0) / col("amax")) + 0.5)))))
 
   // D8 — ANN over the quantized codes: the search loop D7's compression
   // exists for. Candidate generation runs ENTIRELY on int8 codes (the
@@ -1932,28 +1964,21 @@ object AnnPack extends QueryPack {
   private val quantCandK = 4 * K
 
   private[graft] def quantizedCodes(embs: DataFrame): DataFrame =
-    embs
-      .select(col("vec_id"), col("label"),
-        Vectors.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Vectors.norm(col("v")))
-      .withColumn("amax", array_max(transform(col("v"), x => abs(x))))
-      .filter(col("amax") > 0)
+    int8Coded(normed(embs, "label"))
       // codes as exact small integers carried in doubles: the native
       // DotProduct/L2Norm kernels then compute EXACT integer sums
       // (|q|<=127, 64 dims => far inside the 2^53 exact-integer range)
-      .withColumn("q", transform(col("v"), x =>
-        greatest(lit(-127L), least(lit(127L),
-          floor(x * (lit(127.0) / col("amax")) + 0.5))).cast(DoubleType)))
+      .withColumn("q", col("q").cast(ArrayType(DoubleType)))
       .withColumn("ql2", Vectors.norm(col("q")))
 
   private val annQuantized = GraftQuery(
     "ann_quantized",
     (s, d) => {
       val base = quantizedCodes(Tables.embeddings(s, d))
-      val qs = base.filter(pmod(col("vec_id"), lit(50)) === 0)
+      val qs = base.filter(isQuery)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
           col("nrm").as("qn"), col("q").as("qq"), col("ql2").as("qql2"))
-      val c = base.filter(pmod(col("vec_id"), lit(50)) =!= 0)
+      val c = base.filter(!isQuery)
       val pairs = c.join(broadcast(qs))
         .withColumn("cos_q",
           Vectors.cosine(col("qq"), col("q"), col("qql2"), col("ql2")))
@@ -1968,13 +1993,7 @@ object AnnPack extends QueryPack {
           Vectors.cosine(col("qv"), col("v"), col("qn"), col("nrm")))
         .select(col("query_id"), col("vec_id"), col("cos_q"),
           col("cos_sim"))
-      val top = graft.plans.TopKPerKey(exact,
-        keys = Seq(col("query_id")),
-        order = Seq(col("cos_sim").desc, col("vec_id")),
-        k = K)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      top.withColumn("rank", row_number().over(w).cast(LongType))
+      topKPerQuery(exact, K, Seq("cos_q"))
         .select(col("query_id"), col("rank"), col("vec_id"),
           col("cos_q"), col("cos_sim"))
         .orderBy(col("query_id"), col("rank"))
@@ -2070,29 +2089,15 @@ object AnnPack extends QueryPack {
           lit(pqSubDim)).as("sv"))
       .withColumn("ss", Vectors.dot(col("sv"), col("sv")))
 
-  /** Per-subspace argmin-centroid assignment — kmAssign grouped by
-    * `sub` (map-side-combinable min_by, low cid on ties).
+  /** The PQ space: m independent subspace quantizers keyed by `sub`,
+    * codes `cid` — the coarse quantizer's Lloyd step per group.
     */
-  private[graft] def pqAssign(subs: DataFrame, cent: DataFrame): DataFrame =
-    subs.join(broadcast(cent), Seq("sub"))
-      .withColumn("dist2",
-        col("ss") + col("cc") - lit(2.0d) * Vectors.dot(col("sv"), col("cv")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(
-        min_by(col("cid"),
-          struct(col("dist2").as("d"), col("cid").as("c"))).as("cid"),
-        first(col("sv")).as("sv"), first(col("ss")).as("ss"))
+  private val pqSpace = LloydSpace(Seq("sub"), "cid", "sv", "ss")
 
-  private def pqRecenter(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("j", "x")))
-      .groupBy(col("sub"), col("cid"), col("j"))
-      .agg((sum(col("x").cast(DecimalType(28, 12))).cast(DoubleType) /
-        count(lit(1))).as("c"))
-      .groupBy(col("sub"), col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
-        e => e.getField("c")).as("cv"))
-      .withColumn("cc", Vectors.dot(col("cv"), col("cv")))
+  /** Corpus codes against trained books: (vec_id, sub, cid). */
+  private[graft] def pqCodesOf(subs: DataFrame, books: DataFrame): DataFrame =
+    lloydAssign(subs, books, pqSpace)
+      .select(col("vec_id"), col("sub"), col("cid"))
 
   /** m deterministic per-subspace codebooks (sub, cid, cv, cc): the
     * pqKs hash-first vectors of each subspace seed it (TopKPerKey
@@ -2110,9 +2115,7 @@ object AnnPack extends QueryPack {
       .select(col("sub"), col("cid").cast(IntegerType).as("cid"),
         col("e.sv").as("cv"))
       .withColumn("cc", Vectors.dot(col("cv"), col("cv")))
-    (1 to pqIters).foldLeft(seeds: DataFrame) {
-      (c, _) => pqRecenter(pqAssign(subs, c))
-    }
+    lloyd(subs, seeds, pqIters, pqSpace)
   }
 
   /** Trained codebooks + corpus codes, shared by both PQ queries
@@ -2125,13 +2128,10 @@ object AnnPack extends QueryPack {
     require(dim == lshDim,
       s"PQ slicing is built for $lshDim-dim embeddings ($pqM × " +
         s"$pqSubDim); this corpus has $dim")
-    val corpus = vecs(s, d).filter(pmod(col("vec_id"), lit(50)) =!= 0)
+    val corpus = vecs(s, d).filter(!isQuery)
     val subs = pqSlices(corpus).persistTracked
     val cent = pqCentroids(subs).persistTracked
-    val codes = pqAssign(subs, cent)
-      .select(col("vec_id"), col("sub"), col("cid"))
-      .persistTracked
-    (cent, codes)
+    (cent, pqCodesOf(subs, cent).persistTracked)
   }
 
   /** The shared SQL train: slices → grouped seeds → two grouped Lloyd
@@ -2200,31 +2200,6 @@ object AnnPack extends QueryPack {
       FROM codes GROUP BY vec_id ORDER BY vec_id
       """))
 
-  /** The ADC-search tail shared by `ann_pq` and
-    * [[graft.sources.PqStore.search]] (the persisted path must
-    * reproduce the in-query scores bit-for-bit, so it runs the SAME
-    * code): per-query LUT over the broadcast codebooks, decimal-routed
-    * approx cosine from code lookups, bounded pool, exact re-rank.
-    *
-    * Shape (reworked r9 — the r8 spelling joined codes against the LUT
-    * on (sub, cid) and hash-aggregated the n·q·m exploded rows, an
-    * n·q-row SHUFFLE on the brute-force pair mass): codes collapse to
-    * ONE array row per vector — `code[sub] = cid` — and each query's
-    * LUT flattens to ONE slot-indexed array (`sub·ks + cid`), so the
-    * ADC pass is a broadcast nested loop producing each (query, vec)
-    * pair exactly once with its 8-term sum computed inline in fixed
-    * sub order. Decimal addition is exact and associative, so the
-    * ordered chain equals the oracle's any-order decimal SUM
-    * bit-for-bit. No exchange remains between the code scan and the
-    * bounded TopKPerKey pool (partial heaps prune map-side); the
-    * reconstructed norm rides the same code row via the broadcast
-    * cc-array, replacing the old n·q ⋈ n rnorm join.
-    *
-    * `codes` and `rerankVecs` may carry replay-duplicated rows —
-    * `collect_set` collapses the byte-identical code rows, and the
-    * re-rank dedupes (query, vec) pairs AFTER the pool join, where the
-    * frame is pool-sized rather than corpus-sized.
-    */
   /** (vec_id, code[pqM]): codes collapsed to ONE array row per vector
     * — a single map-side-combinable agg; on the store's vec_id-bucketed
     * codes table this plans with no exchange at all. `collect_set`
@@ -2295,19 +2270,55 @@ object AnnPack extends QueryPack {
         .cast(DecimalType(28, 12))
     }.reduce(_ + _).cast(DoubleType)
 
-  private[graft] def pqAdcSearch(cent: DataFrame, codesRaw: DataFrame,
-      rerankVecsRaw: DataFrame, q: DataFrame): DataFrame = {
-    val codeArr = pqCodeArr(codesRaw)
-    val lutQ = pqLutFlat(cent, q)
-    def adcSum(arr: Column): Column = pqAdcSum(arr)
-    val scored = codeArr
-      .crossJoin(broadcast(pqCcRow(cent)))
-      .withColumn("rn2", adcSum(col("ccArr")))
-      .crossJoin(broadcast(lutQ))
-      .withColumn("ad", adcSum(col("lutArr")))
+  /** (vec_id, code, rn2): one code array per vector with its
+    * reconstructed norm² riding along via the broadcast cc-array.
+    */
+  private def pqCodeNorms(codesRaw: DataFrame, books: DataFrame): DataFrame =
+    pqCodeArr(codesRaw)
+      .crossJoin(broadcast(pqCcRow(books)))
+      .withColumn("rn2", pqAdcSum(col("ccArr")))
+      .drop("ccArr")
+
+  /** ADC approx cosine of (query, vector) rows carrying the query's
+    * LUT (lutArr, qn) and the vector's (code, rn2):
+    * (query_id, vec_id, approx_cos).
+    */
+  private def pqScored(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("ad", pqAdcSum(col("lutArr")))
       .withColumn("approx_cos",
         round(col("ad") / (sqrt(col("rn2")) * col("qn")), 6))
       .select(col("query_id"), col("vec_id"), col("approx_cos"))
+
+  /** The ADC-search tail shared by `ann_pq` and
+    * [[graft.sources.PqStore.search]] (the persisted path must
+    * reproduce the in-query scores bit-for-bit, so it runs the SAME
+    * code): per-query LUT over the broadcast codebooks, decimal-routed
+    * approx cosine from code lookups, bounded pool, exact re-rank.
+    *
+    * Shape (reworked r9 — the r8 spelling joined codes against the LUT
+    * on (sub, cid) and hash-aggregated the n·q·m exploded rows, an
+    * n·q-row SHUFFLE on the brute-force pair mass): codes collapse to
+    * ONE array row per vector — `code[sub] = cid` — and each query's
+    * LUT flattens to ONE slot-indexed array (`sub·ks + cid`), so the
+    * ADC pass is a broadcast nested loop producing each (query, vec)
+    * pair exactly once with its 8-term sum computed inline in fixed
+    * sub order. Decimal addition is exact and associative, so the
+    * ordered chain equals the oracle's any-order decimal SUM
+    * bit-for-bit. No exchange remains between the code scan and the
+    * bounded TopKPerKey pool (partial heaps prune map-side); the
+    * reconstructed norm rides the same code row via the broadcast
+    * cc-array, replacing the old n·q ⋈ n rnorm join.
+    *
+    * `codes` and `rerankVecs` may carry replay-duplicated rows —
+    * `collect_set` collapses the byte-identical code rows, and the
+    * re-rank dedupes (query, vec) pairs AFTER the pool join, where the
+    * frame is pool-sized rather than corpus-sized.
+    */
+  private[graft] def pqAdcSearch(cent: DataFrame, codesRaw: DataFrame,
+      rerankVecsRaw: DataFrame, q: DataFrame): DataFrame = {
+    val scored = pqScored(pqCodeNorms(codesRaw, cent)
+      .crossJoin(broadcast(pqLutFlat(cent, q))))
     val pool = graft.plans.TopKPerKey(scored,
       Seq(col("query_id")),
       Seq(col("approx_cos").desc, col("vec_id")), pqPool)
@@ -2329,12 +2340,6 @@ object AnnPack extends QueryPack {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** The PQ query set: every 50th vector, normed. */
-  private[graft] def pqQueries(s: SparkSession, d: String): DataFrame =
-    vecs(s, d).filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-
   // D11b — ADC search: per-query LUT over the codebooks, approx cosine
   // from code lookups only (decimal-summed — partition-order-proof),
   // bounded pqPool candidate pool per query, exact float re-rank on
@@ -2343,7 +2348,7 @@ object AnnPack extends QueryPack {
     "ann_pq",
     (s, d) => {
       val (cent, codes) = pqModel(s, d)
-      pqAdcSearch(cent, codes, vecs(s, d), pqQueries(s, d))
+      pqAdcSearch(cent, codes, vecs(s, d), queryVecs(s, d))
     },
     Some(pqSearchOracle("TRUE")))
 
@@ -2410,12 +2415,11 @@ object AnnPack extends QueryPack {
     (s, d) => {
       val (books, codes) = pqModel(s, d)
       val n = vecs(s, d)
-      val corpus = kmCorpus(n.filter(pmod(col("vec_id"), lit(50)) =!= 0))
+      val corpus = kmCorpus(n.filter(!isQuery))
       val cent = kmCentroids(corpus).persistTracked
       val cellmap = kmAssign(corpus, cent)
         .select(col("vec_id"), col("cell"))
-      val q = pqQueries(s, d)
-        .withColumn("qq", Vectors.dot(col("qv"), col("qv")))
+      val q = queryVecs(s, d)
       val probed = kmProbe(q, cent)
       val cand = cellmap
         .join(broadcast(probed.select(col("query_id"), col("cell"))),
@@ -2426,16 +2430,9 @@ object AnnPack extends QueryPack {
       // cc-array), the per-query LUT broadcasts as a flat array, and
       // the 8-term sum unrolls inline — the r8 (sub,cid) join +
       // cand·m hash-agg shuffle is gone here too
-      val withRn2 = pqCodeArr(codes)
-        .crossJoin(broadcast(pqCcRow(books)))
-        .withColumn("rn2", pqAdcSum(col("ccArr")))
-        .drop("ccArr")
-      val scored = cand.join(withRn2, Seq("vec_id"))
-        .join(broadcast(pqLutFlat(books, q)), Seq("query_id"))
-        .withColumn("ad", pqAdcSum(col("lutArr")))
-        .withColumn("approx_cos",
-          round(col("ad") / (sqrt(col("rn2")) * col("qn")), 6))
-        .select(col("query_id"), col("vec_id"), col("approx_cos"))
+      val scored = pqScored(cand
+        .join(pqCodeNorms(codes, books), Seq("vec_id"))
+        .join(broadcast(pqLutFlat(books, q)), Seq("query_id")))
       val pool = graft.plans.TopKPerKey(scored,
         Seq(col("query_id")),
         Seq(col("approx_cos").desc, col("vec_id")), ivfpqPool)
@@ -2766,9 +2763,7 @@ object AnnPack extends QueryPack {
     val dir = s"${StoreMemo.root}/$base"
     StoreMemo.once(s, s"${base}_codes", dir,
         Seq(s"${base}_books", s"${base}_codes", s"${base}_vecs")) {
-      val corpus = Tables.embeddings(s, d)
-        .filter(pmod(col("vec_id"), lit(50)) =!= 0)
-        .select(col("vec_id"), col("embedding"))
+      val corpus = corpusSet(s, d)
       if (!split)
         graft.sources.PqStore.write(corpus, base, dir)
       else {
@@ -2781,30 +2776,29 @@ object AnnPack extends QueryPack {
     base
   }
 
-  private def pqQuerySet(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id"), col("embedding"))
+  /** A D12 gate row: search the [[pqStore]] of this `split` with the
+    * query slice; the oracle is ann_pq's, trained on `trainPred`.
+    */
+  private def pqIndexRow(name: String, split: Boolean,
+      trainPred: String): GraftQuery =
+    GraftQuery(name,
+      (s, d) => graft.sources.PqStore.search(
+        s, pqStore(s, d, split), querySet(s, d)),
+      Some(pqSearchOracle(trainPred)))
 
   // D12 — the persisted PQ index through the driver gate: build the
   // store, search the parquet codes — must hash-match ann_pq's oracle
   // VERBATIM (same codebooks, same codes, same ADC arithmetic).
-  private val pqIndexSearch = GraftQuery(
-    "pq_index_search",
-    (s, d) => graft.sources.PqStore.search(
-      s, pqStore(s, d, split = false), pqQuerySet(s, d)),
-    Some(pqSearchOracle("TRUE")))
+  private val pqIndexSearch =
+    pqIndexRow("pq_index_search", split = false, "TRUE")
 
   // D12's APPEND path: train+write on ~91% of the corpus, append the
   // held-out slice encoded against the fixed books, search — the
   // oracle trains on the same reduced set but encodes/scores the FULL
   // corpus, so the hash match proves appended vectors are searchable
   // exactly as if encoded at build time.
-  private val pqIndexAppendSearch = GraftQuery(
-    "pq_index_append_search",
-    (s, d) => graft.sources.PqStore.search(
-      s, pqStore(s, d, split = true), pqQuerySet(s, d)),
-    Some(pqSearchOracle("vec_id % 11 <> 5")))
+  private val pqIndexAppendSearch =
+    pqIndexRow("pq_index_append_search", split = true, "vec_id % 11 <> 5")
 
   override val queries: Seq[GraftQuery] =
     Seq(annBrute, annLsh, knnJoin, dedupEmbedding, annIvf, annIvfKmeans,

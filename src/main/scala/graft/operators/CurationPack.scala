@@ -153,12 +153,7 @@ object CurationPack extends QueryPack {
     * immutable and the layout deterministic); cleared with the cache
     * registry — the same invalidation contract as every registry memo.
     */
-  private val shardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  graft.Caches.onRelease(() => {
-    shardDirs.values.forEach(graft.Caches.deleteDir(_))
-    shardDirs.clear()
-  })
+  private val shardDirs = new graft.Caches.DirMemo
 
   // H8 through the driver gate — the cf_parse_config pattern: land the
   // packing as physical training shards (TrainingShards.write: one
@@ -169,12 +164,12 @@ object CurationPack extends QueryPack {
   private val shardsRoundtrip = GraftQuery(
     "shards_roundtrip",
     (s, d) => {
-      val path = shardDirs.computeIfAbsent(d, _ => {
+      val path = shardDirs(d) {
         val dir = java.nio.file.Files
           .createTempDirectory("graft_shards").toString
         graft.sources.TrainingShards.write(packedDocs(s, d), dir)
         dir
-      })
+      }
       s.read.parquet(s"$path/data")
         .select(col("doc_id"), col("lang"), col("n_tokens"),
           col("cum_tokens"),

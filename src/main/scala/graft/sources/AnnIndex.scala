@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.functions.Vectors
 import graft.operators.AnnPack
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -89,11 +88,6 @@ object AnnIndex {
   private def centroidsDir(path: String, gen: Int): String =
     s"$path/centroids${genSuffix(gen)}"
 
-  /** (vec_id, v, nrm) off an (vec_id, embedding) frame. */
-  private def normed(embs: DataFrame): DataFrame = embs
-    .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
-    .withColumn("nrm", Vectors.norm(col("v")))
-
   /** Cell-aligned postings write: one exchange on the cell key so each
     * cell's rows live in exactly one task → one file per (touched)
     * cell, vec_id-sorted within it. `partitionBy` keeps the directory
@@ -113,7 +107,7 @@ object AnnIndex {
     */
   def write(embs: DataFrame, path: String, k: Int = 8,
       iters: Int = 2): Unit = {
-    val n = normed(embs)
+    val n = AnnPack.normed(embs)
     trainAndLand(n, k, iters, s"$path/centroids", s"$path/lists")
   }
 
@@ -126,12 +120,9 @@ object AnnIndex {
     */
   private def trainAndLand(n: DataFrame, k: Int, iters: Int,
       centDir: String, listsDir: String): Unit = {
-    val corpus = AnnPack.kmCorpus(n)
-    AnnPack.kmCentroids(corpus, k, iters)
+    AnnPack.kmCentroids(AnnPack.kmCorpus(n), k, iters)
       .write.mode("overwrite").parquet(centDir)
-    writeLists(AnnPack.kmAssign(corpus, n.sparkSession.read.parquet(centDir))
-      .join(n.select(col("vec_id"), col("nrm")), "vec_id")
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
+    writeLists(AnnPack.ivfPostings(n, n.sparkSession.read.parquet(centDir)),
       listsDir, "overwrite")
   }
 
@@ -152,10 +143,7 @@ object AnnIndex {
     Bucketed.withWriterLeaseAt(spark, s"$path/lists", s"AnnIndex($path)") {
       val gen = servingGen(spark, path)
       val cent = spark.read.parquet(centroidsDir(path, gen))
-      val n = normed(embs)
-      writeLists(AnnPack.kmAssign(AnnPack.kmCorpus(n), cent)
-        .join(n.select(col("vec_id"), col("nrm")), "vec_id")
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
+      writeLists(AnnPack.ivfPostings(AnnPack.normed(embs), cent),
         listsDir(path, gen), "append")
     }
 
@@ -259,12 +247,8 @@ object AnnIndex {
       k: Int = 5, nprobe: Int = 3): DataFrame = {
     val gen = servingGen(spark, path)
     val cent = spark.read.parquet(centroidsDir(path, gen))
-    val q = queries
-      .select(col("vec_id").as("query_id"),
-        Vectors.toDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Vectors.norm(col("qv")))
-      .withColumn("qq", Vectors.dot(col("qv"), col("qv")))
-    val probed = AnnPack.kmProbe(q, cent, nprobe)
+    val probed = AnnPack.kmProbe(
+      AnnPack.asQueries(AnnPack.normed(queries)), cent, nprobe)
     // the probed cell set is metadata-scale (≤ nprobe · |queries|,
     // deduped to ≤ k cells) — collecting it turns the postings scan
     // into a statically partition-pruned read of only those cells
@@ -283,11 +267,6 @@ object AnnIndex {
       // duplicate rows are byte-identical, so which survives is
       // immaterial)
       .dropDuplicates("vec_id")
-    val pairs = lists.join(broadcast(probed), Seq("cell"))
-      .withColumn("cos_sim",
-        Vectors.cosine(col("qv"), col("v"), col("qn"), col("nrm")))
-      .select(col("query_id"), col("vec_id"), col("cell"), col("cos_sim"))
-    AnnPack.topKPerQuery(pairs, k, Seq("cell"))
-      .orderBy(col("query_id"), col("rank"))
+    AnnPack.ivfRerank(lists, probed, k)
   }
 }

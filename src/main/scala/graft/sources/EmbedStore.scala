@@ -59,12 +59,10 @@ import org.apache.spark.sql.types.IntegerType
 object EmbedStore {
 
   /** (vec_id, label, v, nrm) for an (vec_id, label, embedding) frame —
-    * the same widening+norm discipline as every AnnPack query.
+    * [[AnnPack.normed]], the frame every AnnPack query reads.
     */
   private def normed(embs: DataFrame): DataFrame =
-    embs.select(col("vec_id"), col("label"),
-      Vectors.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Vectors.norm(col("v")))
+    AnnPack.normed(embs, "label")
 
   /** label+cell as ONE join column, matching the lists table's bucket
     * spec — see [[MinHashStore]] on why the composite must be a single
@@ -129,13 +127,8 @@ object EmbedStore {
     val n = normed(batch)
     // exact-bound cell pruning (D6's shape): the cells survive iff their
     // upper bound clears τ, so every cos ≥ τ member is in a probed cell
-    val probes = n.join(broadcast(cells), Seq("label"))
-      .withColumn("qang", AnnPack.clampedAngle(
-        Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-      .withColumn("ub",
-        cos(greatest(lit(0.0), col("qang") - col("r")))
-          + lit(AnnPack.boundEps))
-      .filter(col("ub") >= tau)
+    val probes = AnnPack.ubProbe(n.join(broadcast(cells), Seq("label")),
+        lit(tau))
       .select(col("vec_id"), ckey(col("label"), col("cell")).as("ckey"),
         col("v").as("qv"), col("nrm").as("qn"))
     val verified = probes.join(lists, Seq("ckey"))
@@ -151,6 +144,16 @@ object EmbedStore {
       // (duplicates carry identical cos_sim) keeps n_hist_matches a
       // count of distinct history VECTORS
       .dropDuplicates("vec_id", "h_id")
+    verdictsOf(batch, verified)
+  }
+
+  /** The verdict row per batch vector off its verified (vec_id, h_id,
+    * cos_sim) pairs: (vec_id, n_hist_matches, hist_canonical, best_cos)
+    * — the match count, the smallest matching history id and the best
+    * cosine, or the 0 / -1 / 0.0 sentinels when no pair cleared τ.
+    * Shared by both legs, so their verdict rows cannot drift apart.
+    */
+  private def verdictsOf(batch: DataFrame, verified: DataFrame): DataFrame = {
     val verdicts = verified.groupBy(col("vec_id"))
       .agg(count(lit(1)).as("__n"), min(col("h_id")).as("__hist"),
         max(col("cos_sim")).as("__best"))
@@ -264,16 +267,11 @@ object EmbedStore {
     */
   private def bandsRowsOf(n: DataFrame, bbits: DataFrame, dim: Int,
       g: AnnPack.Geometry, bgen: Option[Int]): DataFrame = {
-    val rows0 = n.withColumn("v", AnnPack.bandDimGuard(dim))
-      .withColumn("sigbits", AnnPack.bandSigBits(dim, g.bands * g.maxBits))
-      .join(broadcast(bbits.select(col("label"), col("bits"))),
-        Seq("label"))
-      .select(col("vec_id").as("h_id"), col("label"), col("v"),
-        col("nrm"), explode(AnnPack.bandKeyCols(g.bands, g.maxBits))
-          .as("bk"))
-      .select(bkey3(col("label"), col("bk.band"), col("bk.key"))
-          .as("bkey"),
-        col("h_id"), col("v").as("hv"), col("nrm").as("hnrm"))
+    val rows0 = AnnPack.bandKeysOf(
+        AnnPack.bandSigs(n, bbits, dim, g.bands, g.maxBits),
+        g.bands, g.maxBits)
+      .select(bkey3(col("label"), col("band"), col("key")).as("bkey"),
+        col("vec_id").as("h_id"), col("v").as("hv"), col("nrm").as("hnrm"))
     val rows = bgen match {
       case Some(gen) => rows0.withColumn("bgen", lit(gen))
       case None => rows0
@@ -411,17 +409,8 @@ object EmbedStore {
     val n = normed(batch)
     // labels the store has never seen drop at the inner bits join (no
     // history ⇒ no verdict) and re-attach through the final left join
-    val sigs = n.withColumn("v", AnnPack.bandDimGuard(dim))
-      .withColumn("sigbits", AnnPack.bandSigBits(dim, numBands * maxBits))
-      .join(broadcast(bbits.select(col("label"), col("bits"))),
-        Seq("label"))
-    val probes = sigs
-      .select(col("vec_id"), col("label"), col("bits"),
-        explode(AnnPack.bandKeyCols(numBands, maxBits)).as("bk"))
-      .select(col("vec_id"), col("label"), col("bits"),
-        col("bk.band").as("band"), col("bk.key").as("key0"))
-      .select(col("vec_id"), col("label"), col("band"),
-        explode(AnnPack.bandProbeKeys(maxBits)).as("key"))
+    val sigs = AnnPack.bandSigs(n, bbits, dim, numBands, maxBits)
+    val probes = AnnPack.bandProbesOf(sigs, numBands, maxBits)
       .select(col("vec_id"),
         bkey3(col("label"), col("band"), col("key")).as("bkey"))
     val cand = probes.join(bands, Seq("bkey"))
@@ -437,14 +426,7 @@ object EmbedStore {
       .withColumn("cos_sim",
         Vectors.cosine(col("qv"), col("hv"), col("qn"), col("hnrm")))
       .filter(col("cos_sim") >= tau)
-    val verdicts = verified.groupBy(col("vec_id"))
-      .agg(count(lit(1)).as("__n"), min(col("h_id")).as("__hist"),
-        max(col("cos_sim")).as("__best"))
-    batch.select(col("vec_id")).join(verdicts, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("__n"), lit(0L)).as("n_hist_matches"),
-        coalesce(col("__hist"), lit(-1L)).as("hist_canonical"),
-        coalesce(col("__best"), lit(0.0)).as("best_cos"))
+    verdictsOf(batch, verified)
   }
 
   /** PER-LABEL routed probe (r14 — the r13 verdict's task 1, store
@@ -759,12 +741,7 @@ object EmbedStore {
       // mean's floating arithmetic need not be cross-engine portable —
       // the bound is valid for ANY (centroid, max-member-angle) pair,
       // and verdicts only ever come from exact cosines.
-      val freshCent = fresh
-        .select(col("label"), posexplode(col("v")).as(Seq("j", "x")))
-        .groupBy(col("label"), col("j")).agg(avg(col("x")).as("c"))
-        .groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
-          e => e.getField("c")).as("cv"))
+      val freshCent = AnnPack.centroidsOf(fresh, Seq("label"), mean = avg(_))
         .withColumn("cnrm", Vectors.norm(col("cv")))
         .withColumn("cell", lit(1).cast(IntegerType))
         .select(col("label"), col("cell"), col("cv"), col("cnrm"))
@@ -776,10 +753,8 @@ object EmbedStore {
         .select(col("vec_id"), col("label"), col("cell"), col("v"),
           col("nrm"))
         .localCheckpoint(true)
-      val newRadii = routed.join(broadcast(allCent), Seq("label", "cell"))
-        .withColumn("ang", AnnPack.clampedAngle(
-          Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))))
-        .groupBy(col("label"), col("cell")).agg(max(col("ang")).as("r_app"))
+      val newRadii = AnnPack.cellRadii(routed, allCent, Seq("label", "cell"))
+        .withColumnRenamed("r", "r_app")
       val grown = cells.join(newRadii, Seq("label", "cell"), "left")
         .select(col("label"), col("cell"), col("cv"), col("cnrm"),
           greatest(col("r"), coalesce(col("r_app"), lit(0.0))).as("r"))

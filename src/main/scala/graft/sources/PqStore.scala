@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.functions.Vectors
 import graft.operators.AnnPack
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,18 +36,13 @@ import org.apache.spark.sql.functions._
   */
 object PqStore {
 
-  private def normed(embs: DataFrame): DataFrame =
-    embs.select(col("vec_id"),
-      Vectors.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Vectors.norm(col("v")))
-
   /** Train the codebooks on `embs` (vec_id, embedding) and land all
     * three tables at `path`.
     */
   def write(embs: DataFrame, tableBase: String, path: String,
       buckets: Int = 8): Unit = {
     val spark = embs.sparkSession
-    val n = normed(embs)
+    val n = AnnPack.normed(embs)
     val subs = AnnPack.pqSlices(n.select(col("vec_id"), col("v")))
     val cent = AnnPack.pqCentroids(subs)
     Bucketed.writePlain(cent.select(col("sub"), col("cid"), col("cv"),
@@ -56,11 +50,10 @@ object PqStore {
       s"${tableBase}_books", s"$path/books", Seq("sub", "cid"))
     spark.catalog.refreshTable(s"${tableBase}_books")
     Bucketed.writeBucketed(
-      AnnPack.pqAssign(subs, spark.table(s"${tableBase}_books"))
-        .select(col("vec_id"), col("sub"), col("cid")),
+      AnnPack.pqCodesOf(subs, spark.table(s"${tableBase}_books")),
       s"${tableBase}_codes", "vec_id", buckets, s"$path/codes")
-    Bucketed.writeBucketed(n.select(col("vec_id"), col("v"), col("nrm")),
-      s"${tableBase}_vecs", "vec_id", buckets, s"$path/vecs")
+    Bucketed.writeBucketed(n, s"${tableBase}_vecs", "vec_id", buckets,
+      s"$path/vecs")
   }
 
   /** Encode `embs` (vec_id, embedding) against the FIXED books and
@@ -69,17 +62,14 @@ object PqStore {
     */
   def append(spark: SparkSession, tableBase: String,
       embs: DataFrame): Unit = {
-    val n = normed(embs)
+    val n = AnnPack.normed(embs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val subs = AnnPack.pqSlices(n.select(col("vec_id"), col("v")))
       Bucketed.appendBucketed(spark,
-        AnnPack.pqAssign(subs, spark.table(s"${tableBase}_books"))
-          .select(col("vec_id"), col("sub"), col("cid")),
+        AnnPack.pqCodesOf(subs, spark.table(s"${tableBase}_books")),
         s"${tableBase}_codes")
-      Bucketed.appendBucketed(spark,
-        n.select(col("vec_id"), col("v"), col("nrm")),
-        s"${tableBase}_vecs")
+      Bucketed.appendBucketed(spark, n, s"${tableBase}_vecs")
     } finally n.unpersist()
   }
 
@@ -89,14 +79,11 @@ object PqStore {
     */
   def search(spark: SparkSession, tableBase: String,
       queries: DataFrame): DataFrame = {
-    val q = normed(queries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
     AnnPack.pqAdcSearch(
       spark.table(s"${tableBase}_books"),
       spark.table(s"${tableBase}_codes"),
       spark.table(s"${tableBase}_vecs"),
-      q)
+      AnnPack.asQueries(AnnPack.normed(queries)))
   }
 
   /** Restore one sorted file per bucket after appends. */

@@ -33,7 +33,7 @@ object CurationDemo {
     val dataDir = args(0)
     val workDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-curation").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.SysStat.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-curation-demo")

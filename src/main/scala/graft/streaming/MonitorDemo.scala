@@ -30,7 +30,7 @@ object MonitorDemo {
       else java.nio.file.Files.createTempDirectory("graft-monitor").toString
     val store = s"$workDir/store"
     val rollup = s"$workDir/rollup"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.SysStat.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-monitor-demo")

@@ -469,7 +469,7 @@ object StreamingIngest {
     val dataDir = args(0)
     val workDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-ingest").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.SysStat.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-ingest-demo")

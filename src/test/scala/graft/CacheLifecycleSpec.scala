@@ -24,4 +24,26 @@ class CacheLifecycleSpec extends GraftSpec {
       "releaseAll left persisted blocks: " +
         spark.sparkContext.getPersistentRDDs.values.map(_.name).mkString("; "))
   }
+
+  test("DirMemo builds each key once, serves a nested lookup, and " +
+      "releaseAll deletes every directory it built") {
+    val memo = new Caches.DirMemo
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def build(prefix: String): String = {
+      builds.incrementAndGet()
+      java.nio.file.Files.createTempDirectory(prefix).toString
+    }
+    // a build that looks up another key of the same memo (what the
+    // ann_index maintenance rows do with the append store)
+    val outer = memo("outer") {
+      memo("inner")(build("graft_memo_inner"))
+      build("graft_memo_outer")
+    }
+    val inner = memo("inner")(build("graft_memo_again"))
+    assert(memo("outer")(build("graft_memo_again")) == outer)
+    assert(builds.get == 2)
+    Caches.releaseAll(blocking = true)
+    Seq(outer, inner).foreach(d =>
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(d)), d))
+  }
 }

@@ -8,6 +8,8 @@ abstract class GraftSpec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = GraftSpec.session
+
+  GraftSpec.watchSbt
 }
 
 object GraftSpec {
@@ -18,6 +20,31 @@ object GraftSpec {
     */
   private val cores = sys.props.get("graft.test.cores").map(_.toInt)
     .getOrElse(4)
+
+  /** A forked test JVM exits once the sbt process that forked it
+    * (`graft.test.sbtPid`, passed by build.sbt) is gone. Without this,
+    * killing sbt (as the Tier-1 `timeout` does, ending with a
+    * `kill -9`) left its group JVMs running their suites to the end
+    * with their full heaps. A daemon thread polls the pid's handle
+    * (start-time checked, so a reused pid does not count as alive);
+    * shutdown hooks get 10 s before the JVM halts.
+    */
+  lazy val watchSbt: Unit =
+    sys.props.get("graft.test.sbtPid").foreach { pid =>
+      val sbt = ProcessHandle.of(pid.toLong)
+      val t = new Thread(() => {
+        while (sbt.isPresent && sbt.get.isAlive) Thread.sleep(1000)
+        val halt = new Thread(() => {
+          Thread.sleep(10000)
+          Runtime.getRuntime.halt(1)
+        })
+        halt.setDaemon(true)
+        halt.start()
+        System.exit(1)
+      }, "graft-sbt-watch")
+      t.setDaemon(true)
+      t.start()
+    }
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
