@@ -76,9 +76,10 @@ object AnnPack extends QueryPack {
     * iterative builds (k-means rounds, store writes) run MANY small
     * jobs over this head — a 32-way round-robin exchange added ~0.3 s
     * of task-scheduling overhead per job and regressed every
-    * embeddings-headed store row by 1-3 s cold (quiet-window A/B,
-    * docs/retime_r16_post) while the pre-exchange vector math it
-    * parallelized was sub-second to begin with.
+    * embeddings-headed store row by 1-3 s cold (a quiet-window A/B,
+    * committed with round 16's retime artifacts: see git history) while
+    * the pre-exchange vector math it parallelized was sub-second to
+    * begin with.
     */
   private def vecs(s: SparkSession, d: String): DataFrame =
     normed(Tables.embeddings(s, d), "label")
@@ -1771,15 +1772,6 @@ object AnnPack extends QueryPack {
       ORDER BY li.vec_id
       """))
 
-  /** Memoized on-disk artifacts keyed by input dir: the index content
-    * is a deterministic function of the (immutable) testdata, so a
-    * second query invocation in the same JVM searches the already-built
-    * index — the build-once/query-many usage D9 exists for. Cleared
-    * with the cache registry ([[graft.Caches.releaseAll]]), the same
-    * invalidation contract as every registry-scoped memo.
-    */
-  private val indexDirs = new graft.Caches.DirMemo
-
   /** A D9 gate row: search the store `store` builds (once per JVM ×
     * dataset) with the query slice; the oracle is D5's, trained on the
     * `trainPred` subset of the corpus.
@@ -1795,15 +1787,14 @@ object AnnPack extends QueryPack {
   // artifact-driven path (train + persist the IVF index, then SEARCH the
   // parquet postings with static partition pruning) must hash-match the
   // in-query D5 oracle, proving the persisted index IS the
-  // oracle-verified quantizer. The index builds once per (JVM, dataset);
-  // repeat invocations only search.
+  // oracle-verified quantizer. The index builds once per (JVM, dataset)
+  // ([[graft.Caches.tempDir]], released with the cache registry);
+  // repeat invocations only search — the build-once/query-many usage D9
+  // exists for.
   private val annIndexSearch = annIndexRow("ann_index_search", "TRUE") {
-    (s, d) => indexDirs(d) {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ann_index").toString
+    (s, d) => graft.Caches.tempDir("graft_ann_index", d) { dir =>
       graft.sources.AnnIndex.write(corpusSet(s, d), dir,
         k = kmK, iters = kmIters)
-      dir
     }
   }
 
@@ -1821,49 +1812,44 @@ object AnnPack extends QueryPack {
     * from-scratch build.
     */
   private def annAppendStore(s: SparkSession, d: String): String =
-    indexDirs(s"$d#append") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ann_index_app").toString
+    graft.Caches.tempDir("graft_ann_index_app", d) { dir =>
       val corpus = corpusSet(s, d)
       graft.sources.AnnIndex.write(
         corpus.filter(pmod(col("vec_id"), lit(11)) =!= 5),
         dir, k = kmK, iters = kmIters)
       graft.sources.AnnIndex.append(s, dir,
         corpus.filter(pmod(col("vec_id"), lit(11)) === 5))
-      dir
     }
 
-  /** Recursive file clone of a store directory (parquet + markers) —
-    * the maintenance rows' base-prefix reuse. Plain JVM I/O: the dirs
-    * are driver-local temp stores of the gate rows, never a
+  /** Recursive file clone of a store directory (parquet + markers) into
+    * `dst` — the maintenance rows' base-prefix reuse. Plain JVM I/O: the
+    * dirs are driver-local temp stores of the gate rows, never a
     * distributed filesystem.
     */
-  private def cloneStoreDir(src: String, prefix: String): String = {
-    val dst = java.nio.file.Files.createTempDirectory(prefix)
+  private def cloneStoreDir(src: String, dst: String): Unit = {
     val srcPath = java.nio.file.Paths.get(src)
+    val dstPath = java.nio.file.Paths.get(dst)
     scala.util.Using.resource(java.nio.file.Files.walk(srcPath)) { st =>
       val it = st.iterator()
       while (it.hasNext) {
         val p = it.next()
-        val t = dst.resolve(srcPath.relativize(p))
+        val t = dstPath.resolve(srcPath.relativize(p))
         if (java.nio.file.Files.isDirectory(p))
           java.nio.file.Files.createDirectories(t)
         else java.nio.file.Files.copy(p, t,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    dst.toString
   }
 
   /** Memoized maintenance-row store built from a CLONE of the append
     * row's base store plus `tail` — see [[annAppendStore]].
     */
-  private def maintStoreFrom(s: SparkSession, d: String, key: String,
-      prefix: String)(tail: String => Unit): String =
-    indexDirs(s"$d#$key") {
-      val dir = cloneStoreDir(annAppendStore(s, d), prefix)
+  private def maintStoreFrom(s: SparkSession, d: String, prefix: String)(
+      tail: String => Unit): String =
+    graft.Caches.tempDir(prefix, d) { dir =>
+      cloneStoreDir(annAppendStore(s, d), dir)
       tail(dir)
-      dir
     }
 
   // D9's APPEND path through the driver gate: train + persist the index
@@ -1889,7 +1875,7 @@ object AnnPack extends QueryPack {
       // clone of the append row's (write + append) base — identical
       // rows, see annAppendStore — plus THIS row's tail: the replayed
       // append (the crash shape) and the compaction under test
-      (s, d) => maintStoreFrom(s, d, "compact", "graft_ann_index_cmp") {
+      (s, d) => maintStoreFrom(s, d, "graft_ann_index_cmp") {
         dir =>
           val slice = corpusSet(s, d)
             .filter(pmod(col("vec_id"), lit(11)) === 5)
@@ -1909,7 +1895,7 @@ object AnnPack extends QueryPack {
     annIndexRow("ann_index_rebuild_search", "TRUE") {
       // clone of the append row's (write + append) base — identical
       // rows, see annAppendStore — plus the declared rebuild under test
-      (s, d) => maintStoreFrom(s, d, "rebuild", "graft_ann_index_rb") {
+      (s, d) => maintStoreFrom(s, d, "graft_ann_index_rb") {
         dir =>
           graft.sources.AnnIndex.rebuild(s, dir, k = kmK, iters = kmIters)
       }
@@ -2538,14 +2524,9 @@ object AnnPack extends QueryPack {
     * row proves.
     */
   private def embStore(s: SparkSession, d: String,
-      split: Boolean): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_emb_store_${StoreMemo.tagOf(d)}" +
-      (if (split) "a" else "")
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_lists", dir,
-        Seq(s"${base}_cells", s"${base}_lists", s"${base}_bands",
-          s"${base}_bbits")) {
+      split: Boolean): String =
+    graft.Caches.store(s, d, "graft_emb_store_%s" + (if (split) "a" else ""))(
+        embTables) { (base, dir) =>
       val hist = Tables.embeddings(s, d)
         .filter(pmod(col("vec_id"), lit(2)) === 0)
         .select(col("vec_id"), col("label"), col("embedding"))
@@ -2558,8 +2539,10 @@ object AnnPack extends QueryPack {
           hist.filter(pmod(col("vec_id"), lit(4)) === 2))
       }
     }
-    base
-  }
+
+  /** The catalog tables of an [[graft.sources.EmbedStore]] base. */
+  private def embTables(base: String): Seq[String] =
+    Seq("cells", "lists", "bands", "bbits").map(t => s"${base}_$t")
 
   private def oddBatch(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
@@ -2721,21 +2704,14 @@ object AnnPack extends QueryPack {
     * gate's value is the cont FREEZE, the `_bbits` routing read and
     * the banded probe running at sf1 width every round.
     */
-  private def embStoreAuto(s: SparkSession, d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_emb_store_${StoreMemo.tagOf(d)}c"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_lists", dir,
-        Seq(s"${base}_cells", s"${base}_lists", s"${base}_bands",
-          s"${base}_bbits")) {
+  private def embStoreAuto(s: SparkSession, d: String): String =
+    graft.Caches.store(s, d, "graft_emb_store_%sc")(embTables) { (base, dir) =>
       val hist = Tables.embeddings(s, d)
         .filter(pmod(col("vec_id"), lit(2)) === 0)
         .select(col("vec_id"), col("label"), col("embedding"))
       graft.sources.EmbedStore.write(hist, base, dir,
         geometry = allContGeometry)
     }
-    base
-  }
 
   // C14c — the AUTO-dispatched probe of the persisted embedding store
   // (r15, closing the r14 verdict's task 7): same odd-batch probe, but
@@ -2756,13 +2732,9 @@ object AnnPack extends QueryPack {
     * FIXED books) — the D9 append-gate construction.
     */
   private def pqStore(s: SparkSession, d: String,
-      split: Boolean): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_pq_store_${StoreMemo.tagOf(d)}" +
-      (if (split) "a" else "")
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_codes", dir,
-        Seq(s"${base}_books", s"${base}_codes", s"${base}_vecs")) {
+      split: Boolean): String =
+    graft.Caches.store(s, d, "graft_pq_store_%s" + (if (split) "a" else ""))(
+        b => Seq("books", "codes", "vecs").map(b + "_" + _)) { (base, dir) =>
       val corpus = corpusSet(s, d)
       if (!split)
         graft.sources.PqStore.write(corpus, base, dir)
@@ -2773,8 +2745,6 @@ object AnnPack extends QueryPack {
           corpus.filter(pmod(col("vec_id"), lit(11)) === 5))
       }
     }
-    base
-  }
 
   /** A D12 gate row: search the [[pqStore]] of this `split` with the
     * query slice; the oracle is ann_pq's, trained on `trainPred`.

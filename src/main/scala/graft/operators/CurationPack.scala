@@ -149,26 +149,19 @@ object CurationPack extends QueryPack {
     (s, d) => packedDocs(s, d).orderBy(col("doc_id")),
     Some(shardPackOracle))
 
-  /** Memoized on-disk shard stores keyed by input dir (the testdata is
-    * immutable and the layout deterministic); cleared with the cache
-    * registry — the same invalidation contract as every registry memo.
-    */
-  private val shardDirs = new graft.Caches.DirMemo
-
   // H8 through the driver gate — the cf_parse_config pattern: land the
   // packing as physical training shards (TrainingShards.write: one
   // doc_id-ordered file per (lang, shard_id) + manifest), read the data
   // tree back, and hash-match H2's oracle — the persisted layout is
   // provably lossless. shard_id comes back as a parquet partition
-  // column (int-inferred), cast back to the written long.
+  // column (int-inferred), cast back to the written long. The shard
+  // store is memoized per input dir ([[graft.Caches.tempDir]]): the
+  // testdata is immutable and the layout deterministic.
   private val shardsRoundtrip = GraftQuery(
     "shards_roundtrip",
     (s, d) => {
-      val path = shardDirs(d) {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_shards").toString
-        graft.sources.TrainingShards.write(packedDocs(s, d), dir)
-        dir
+      val path = graft.Caches.tempDir("graft_shards", d) {
+        graft.sources.TrainingShards.write(packedDocs(s, d), _)
       }
       s.read.parquet(s"$path/data")
         .select(col("doc_id"), col("lang"), col("n_tokens"),
@@ -775,11 +768,9 @@ object CurationPack extends QueryPack {
   // the segment table back — and it must hash-match the SAME oracle
   // as the in-query pack_sequences: packing-after-append ≡ one pass.
   private def seqStore(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_seq_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_segs", dir, Seq(s"${base}_segs")) {
+      d: String): String =
+    graft.Caches.store(s, d, "graft_seq_store_%s")(
+        b => Seq(s"${b}_segs")) { (base, dir) =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val thr = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
       graft.sources.SeqStore.write(
@@ -787,8 +778,6 @@ object CurationPack extends QueryPack {
       graft.sources.SeqStore.append(s, base,
         docs.filter(col("doc_id") > thr))
     }
-    base
-  }
 
   private val packStoreRoundtrip = GraftQuery(
     "pack_store_roundtrip",
@@ -905,9 +894,9 @@ object CurationPack extends QueryPack {
     * recomputes, so the recompute path needs disk loss, not just
     * memory pressure.
     */
-  /** Registry-scoped memo of TRAINED weight vectors, keyed by session +
-    * canonicalized feature-frame plan (the [[DedupPack]] ccMemo
-    * discipline): [[qfTrain]] is EAGER — 1 + qfSteps driver-sequential
+  /** TRAINED weight vectors, memoized per (session, feature-frame plan)
+    * ([[graft.Caches.planKey]], as [[DedupPack.clusterPairs]]):
+    * [[qfTrain]] is EAGER — 1 + qfSteps driver-sequential
     * jobs whose per-step model state lives on the driver — so Spark's
     * CacheManager can never dedupe a repeated training run the way it
     * dedupes the declarative frames. Three registry rows
@@ -922,59 +911,35 @@ object CurationPack extends QueryPack {
     * bit-identical to a re-run's. Cleared with the cache registry,
     * same invalidation contract as every persistTracked frame.
     */
-  private val qfTrainMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]]())
-  graft.Caches.onRelease(() => qfTrainMemo.clear())
-
   private[graft] def qfTrain(base: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val spark = base.sparkSession
     def wRowOf(w: Seq[Long]) =
       spark.range(1).select(typedLit(w).as("wArr"))
-    val canon = base.queryExecution.analyzed.canonicalized
-    // toJSON, not toString (r16 ADVICE): the treeString rendering
-    // elides wide field lists under spark.sql.maxToStringFields
-    // (default 25) — the 65-feature plans here are exactly the wide
-    // case, which would leave collision safety resting solely on the
-    // 32-bit semanticHash. The JSON rendering is truncation-free.
-    val memoKey = canon.semanticHash() + "|" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(canon.toJSON.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-    val sessionMemo = qfTrainMemo.synchronized {
-      var m = qfTrainMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
-        qfTrainMemo.put(spark, m)
+    wRowOf(graft.Caches.once[Seq[Long]](graft.Caches.planKey(base)) {
+      val n = base.count()
+      var w: Seq[Long] = Vector.fill(qfF + 1)(0L)
+      if (n > 0) (1 to qfSteps).foreach { _ =>
+        val grads = base.crossJoin(broadcast(wRowOf(w)))
+          .withColumn("z", qfZCol)
+          .select(col("feats"),
+            (expr(s"(GREATEST(${-2 * qfS}, LEAST(${2 * qfS}, z))" +
+              s" + ${2 * qfS}) div 4") - col("y") * lit(qfS)).as("err"))
+          .select(explode(concat(array(lit(-1L)), col("feats"))).as("f"),
+            col("err"))
+          .groupBy(col("f")).agg(sum(col("err")).as("g"))
+          .collect()
+        val upd = w.toArray
+        grads.foreach { r =>
+          val g = r.getLong(1)
+          // JVM Long division truncates toward zero on both signs —
+          // the sign-symmetric tdiv the oracle spells with CASE + //
+          upd((r.getLong(0) + 1L).toInt) -= g / (2L * n)
+        }
+        w = upd.toVector
       }
-      m
-    }
-    val memoed = sessionMemo.get(memoKey)
-    if (memoed != null) return wRowOf(memoed)
-    val n = base.count()
-    var w: Seq[Long] = Vector.fill(qfF + 1)(0L)
-    if (n > 0) (1 to qfSteps).foreach { _ =>
-      val grads = base.crossJoin(broadcast(wRowOf(w)))
-        .withColumn("z", qfZCol)
-        .select(col("feats"),
-          (expr(s"(GREATEST(${-2 * qfS}, LEAST(${2 * qfS}, z))" +
-            s" + ${2 * qfS}) div 4") - col("y") * lit(qfS)).as("err"))
-        .select(explode(concat(array(lit(-1L)), col("feats"))).as("f"),
-          col("err"))
-        .groupBy(col("f")).agg(sum(col("err")).as("g"))
-        .collect()
-      val upd = w.toArray
-      grads.foreach { r =>
-        val g = r.getLong(1)
-        // JVM Long division truncates toward zero on both signs —
-        // the sign-symmetric tdiv the oracle spells with CASE + //
-        upd((r.getLong(0) + 1L).toInt) -= g / (2L * n)
-      }
-      w = upd.toVector
-    }
-    sessionMemo.put(memoKey, w)
-    wRowOf(w)
+      w
+    })
   }
 
   /** Score a feature frame with a one-row model frame — map-only,
@@ -1217,13 +1182,10 @@ object CurationPack extends QueryPack {
   // the full-build row AND the write-evens/append-odds row must both
   // hash-match H11's oracle verbatim.
   private def dsirStore(s: org.apache.spark.sql.SparkSession, d: String,
-      split: Boolean): String = {
-    import graft.sources.StoreMemo
-    val tag = StoreMemo.tagOf(d)
-    val base = if (split) s"graft_dsir_half_$tag" else s"graft_dsir_$tag"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_cnt", dir,
-        Seq(s"${base}_cnt", s"${base}_docs")) {
+      split: Boolean): String =
+    graft.Caches.store(s, d,
+        if (split) "graft_dsir_half_%s" else "graft_dsir_%s")(
+        b => Seq(s"${b}_cnt", s"${b}_docs")) { (base, dir) =>
       val docs = Tables.parallelized(Tables.documents(s, d))
         .select(col("doc_id"), col("text"), col("lang"))
       // the bucket-count deltas ride the SAME persistTracked per-doc
@@ -1245,8 +1207,6 @@ object CurationPack extends QueryPack {
           docs.filter(pmod(col("doc_id"), lit(2)) =!= 0),
           bkts = Some(slice(1)))
     }
-    base
-  }
 
   private val dsirStoreScore = GraftQuery(
     "dsir_store_score",
@@ -1435,24 +1395,20 @@ object CurationPack extends QueryPack {
       """))
 
   // ---- H10b: the persisted trained model, through the driver gate ----
-  // Train once per (JVM, dataset) via the StoreMemo discipline, then
+  // Train once per (JVM, dataset) through Caches.store, then
   // both gate rows SCORE with the stored weights: whole-corpus scoring
   // and two-disjoint-batch scoring (the serving contract) must each
   // reproduce the in-query train+score — quality_score's oracle
   // VERBATIM.
   private def qualityStoreOf(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_quality_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_model", dir, Seq(s"${base}_model")) {
+      d: String): String =
+    graft.Caches.store(s, d, "graft_quality_store_%s")(
+        b => Seq(s"${b}_model")) { (base, dir) =>
       graft.sources.QualityStore.write(
         Tables.parallelized(Tables.documents(s, d))
           .select(col("doc_id"), col("text")),
         base, dir)
     }
-    base
-  }
 
   private val qualityStoreScore = GraftQuery(
     "quality_store_score",

@@ -71,6 +71,25 @@ object DedupPack extends QueryPack {
     round(inter.cast(DoubleType) / (size(sa) + size(sb) - inter), 6)
   }
 
+  /** The near-dup verdict row per `id` of `batch` off its verified
+    * (id, h_id, score) pairs: (id, n_hist_matches, hist_canonical,
+    * `out`) — the match count, the smallest matching history id and
+    * the `best` score, or the 0 / -1 / `none` sentinels when no pair
+    * verified. The one tail of the MinHash, SimHash and embedding
+    * store probes, so their verdict rows cannot drift apart.
+    */
+  private[graft] def verdictsOf(batch: DataFrame, verified: DataFrame,
+      id: String, best: Column, out: String, none: Any): DataFrame = {
+    val verdicts = verified.groupBy(col(id))
+      .agg(count(lit(1)).as("__n"), min(col("h_id")).as("__hist"),
+        best.as("__best"))
+    batch.select(col(id)).join(verdicts, Seq(id), "left")
+      .select(col(id),
+        coalesce(col("__n"), lit(0L)).as("n_hist_matches"),
+        coalesce(col("__hist"), lit(-1L)).as("hist_canonical"),
+        coalesce(col("__best"), lit(none)).as(out))
+  }
+
   /** Append `is_dup` / `__canonical` / `__gsize` to a frame carrying
     * (doc_id, fingerprint) via an AGGREGATION + join-back, not a window
     * over the fingerprint: the min/count agg combines map-side and
@@ -331,12 +350,13 @@ object DedupPack extends QueryPack {
   // a handful of iterations; a cap bounds the pathological chain case.
   // The oracle computes the same fixpoint as a DuckDB recursive-CTE
   // transitive closure with MIN over the reachable set.
-  /** Connected components over an undirected (doc_a, doc_b) pair graph
-    * by iterative min-label propagation; returns (node, lab) where lab
-    * is the component's minimum doc id. Each iteration is one
-    * edge⋈label join + a min-aggregate; the driver reads only a scalar
-    * convergence count per round. Shared by C6 and C10.
+  /** Rounds the most recent NON-memoized [[clusterPairs]] run took —
+    * spec observability for the CC-MR O(log) convergence claim (a
+    * label-propagation regression needs diameter rounds and would blow
+    * straight through the cap on a long chain).
     */
+  @volatile private[graft] var lastCcRounds: Int = -1
+
   /** Distributed connected components by alternating large-star /
     * small-star contraction (the CC-MR algorithm of Kiveris et al.,
     * "Connected Components in MapReduce and Beyond"): each round
@@ -354,58 +374,18 @@ object DedupPack extends QueryPack {
     * and left untruncated the nested plan DOUBLES per round (measured:
     * a 2^31-char plan string before truncation). The driver reads only
     * scalar convergence counts.
+    *
+    * The labels are memoized per (session, input plan)
+    * ([[graft.Caches.planKey]]): the truncation makes the loop's frames
+    * non-canonical, so Spark's CacheManager cannot dedupe a REPEATED
+    * call the way it dedupes every declarative subplan — without the
+    * memo, every invocation re-runs the whole contraction. If the data
+    * underneath an identical plan changes (a parquet path rewritten in
+    * place), call [[graft.Caches.releaseAll]] before re-running,
+    * exactly as the persisted frames require.
     */
-  /** Registry-scoped memo of converged component labels: each round's
-    * plan truncation (LogicalRDD over a fresh RDD) makes the loop's
-    * frames non-canonical, so Spark's CacheManager cannot dedupe a
-    * REPEATED clusterPairs call the way it dedupes every declarative
-    * subplan — without this, every invocation re-runs the whole
-    * contraction. Keyed by session + canonicalized input plan; cleared
-    * with the cache registry.
-    */
-  /** Outer key: the SparkSession OBJECT under identity semantics — a
-    * new session can never collide with a dead one the way an
-    * identityHashCode string key could. (The weak entry itself lingers
-    * until [[graft.Caches.releaseAll]]: the memoized DataFrames
-    * reference their session, the classic value→key strong reference
-    * that keeps a WeakHashMap entry live — harmless here because the
-    * registry lifecycle clears it, and correctness only needs the
-    * no-collision property.) Inner key: the canonicalized input plan.
-    * Invalidation contract: the memo is a REGISTRY-scoped cache like
-    * every persistTracked frame — if the data underneath an identical
-    * plan changes (e.g. a parquet path is rewritten in place), call
-    * [[graft.Caches.releaseAll]] before re-running, exactly as the
-    * persisted frames require.
-    */
-  private val ccMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-  graft.Caches.onRelease(() => ccMemo.clear())
-
-  /** Rounds the most recent NON-memoized [[clusterPairs]] run took —
-    * spec observability for the CC-MR O(log) convergence claim (a
-    * label-propagation regression needs diameter rounds and would blow
-    * straight through the cap on a long chain).
-    */
-  @volatile private[graft] var lastCcRounds: Int = -1
-
-  private[graft] def clusterPairs(pairs: DataFrame): DataFrame = {
-      val canon = pairs.queryExecution.analyzed.canonicalized
-      val memoKey =
-        canon.semanticHash() + "|" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(canon.toString.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-      val sessionMemo = ccMemo.synchronized {
-        var m = ccMemo.get(pairs.sparkSession)
-        if (m == null) {
-          m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-          ccMemo.put(pairs.sparkSession, m)
-        }
-        m
-      }
-      val memoed = sessionMemo.get(memoKey)
-      if (memoed != null) return memoed
+  private[graft] def clusterPairs(pairs: DataFrame): DataFrame =
+    graft.Caches.once[DataFrame](graft.Caches.planKey(pairs)) {
       val spark = pairs.sparkSession
       def truncated(df: DataFrame): DataFrame =
         spark.createDataFrame(df.rdd, df.schema)
@@ -466,14 +446,12 @@ object DedupPack extends QueryPack {
       lastCcRounds = iter
       // the converged edge set is a star per component: every non-min
       // node points at the component minimum
-      val labels = e.select(col("u").as("node"), col("v").as("lab"))
+      e.select(col("u").as("node"), col("v").as("lab"))
         .union(e.select(col("v"), col("v")).distinct()
           .toDF("node", "lab"))
         .groupBy(col("node")).agg(min(col("lab")).as("lab"))
         .persistTracked
-      sessionMemo.put(memoKey, labels)
-      labels
-  }
+    }
 
   private val dedupCluster = GraftQuery(
     "dedup_cluster",
@@ -1129,25 +1107,18 @@ object DedupPack extends QueryPack {
   // spec-asserted), while only the small batch shuffles. Verdicts
   // distinguish re-ingested content (dup_of_history) from novel
   // within-batch duplicates (batch-minimum election, agg + join-back).
-  /** Store builds memoized through [[graft.sources.StoreMemo]] — its
-    * release hook resets the memo like every other dataset-keyed one
-    * (persisted frames, AnnPack.indexDirs, ccMemo): the memo key is
-    * catalog-table existence, which releaseAll does not touch on its
-    * own — without the hook, a dataset dir rewritten in-session would
-    * probe the NEW batch against the STALE history store.
+  /** Store builds memoized through [[graft.Caches.store]]: releaseAll
+    * drops them with every other registry memo, so a dataset dir
+    * rewritten in-session never probes the NEW batch against the STALE
+    * history store.
     */
-  private def fpStore(s: SparkSession, d: String): String = {
-    import graft.sources.StoreMemo
-    val table = s"graft_fp_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$table"
-    StoreMemo.once(s, table, dir, Seq(table)) {
+  private def fpStore(s: SparkSession, d: String): String =
+    graft.Caches.store(s, d, "graft_fp_store_%s")(Seq(_)) { (table, dir) =>
       graft.sources.FingerprintStore.write(
         Tables.parallelized(Tables.documents(s, d))
           .filter(pmod(col("doc_id"), lit(2)) === 0),
         table, dir)
     }
-    table
-  }
 
   private val dedupIncremental = GraftQuery(
     "dedup_incremental",
@@ -1192,12 +1163,9 @@ object DedupPack extends QueryPack {
   // The oracle recomputes C2's full pair graph over the whole corpus
   // and keeps the cross-parity pairs — the store path must find
   // exactly the pairs the in-corpus path finds.
-  private def mhStore(s: SparkSession, d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_mh_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_bands", dir,
-        Seq(s"${base}_bands", s"${base}_shingles")) {
+  private def mhStore(s: SparkSession, d: String): String =
+    graft.Caches.store(s, d, "graft_mh_store_%s")(
+        b => Seq(s"${b}_bands", s"${b}_shingles")) { (base, dir) =>
       // uncapped: the oracle recomputes the FULL pair graph, so the
       // gated path must be exact by construction — the bounded-recall
       // cap (MinHashStore.capBands) is a production-ingest trade, not
@@ -1207,8 +1175,6 @@ object DedupPack extends QueryPack {
           .filter(pmod(col("doc_id"), lit(2)) === 0),
         base, dir, maxPerBucket = Int.MaxValue)
     }
-    base
-  }
 
   private val dedupIncrementalMinhash = GraftQuery(
     "dedup_incremental_minhash",

@@ -443,27 +443,19 @@ object SearchPack extends QueryPack {
   // over disjoint doc sets, so BOTH must hash-match the in-query
   // scores bit-for-bit (the D9 gating pattern, zero approximation
   // caveats here).
-  /** (catalog table, store dir) artifacts to drop on cache release —
-    * the memoized stores must not outlive a released/rewritten dataset
-    * (the C11/C12 r6 lesson).
-    */
   /** Memoized store build shared by the I4/I5 registry rows
-    * ([[graft.sources.StoreMemo]] discipline): write over the full
-    * corpus (split = false) or write-evens + append-odds (split =
-    * true — the append-path gate), keyed on the dataset dir,
-    * registered for release-time cleanup.
+    * ([[graft.Caches.store]]): write over the full corpus (split =
+    * false) or write-evens + append-odds (split = true — the
+    * append-path gate), keyed on the dataset dir.
     */
   private def memoStore(s: SparkSession, d: String, prefix: String,
-      existsSuffix: String, split: Boolean)(
+      split: Boolean)(
       write: (DataFrame, String, String) => Unit,
-      append: (SparkSession, String, DataFrame) => Unit): String = {
-    import graft.sources.StoreMemo
-    val tag = StoreMemo.tagOf(d)
-    val base = if (split) s"${prefix}_half_$tag" else s"${prefix}_$tag"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_$existsSuffix", dir,
+      append: (SparkSession, String, DataFrame) => Unit): String =
+    graft.Caches.store(s, d,
+        if (split) s"${prefix}_half_%s" else s"${prefix}_%s")(b =>
         Seq("postings", "docs", "totals", "uni", "big")
-          .map(suf => s"${base}_$suf")) {
+          .map(suf => s"${b}_$suf")) { (base, dir) =>
       // NOT parallelized (r16 measured): the build is a burst of small
       // jobs (write + append legs) whose extra 32-way head exchange
       // cost more in task scheduling than the one-task tokenize it
@@ -475,8 +467,6 @@ object SearchPack extends QueryPack {
       if (split)
         append(s, base, docs.filter(pmod(col("doc_id"), lit(2)) =!= 0))
     }
-    base
-  }
 
   /** Parity slice of the PERSISTED corpus postings frame — the filter
     * sits ABOVE the cached aggregate, so a store build reads the
@@ -495,7 +485,7 @@ object SearchPack extends QueryPack {
 
   private def searchStore(s: SparkSession, d: String, split: Boolean)
       : String =
-    memoStore(s, d, "graft_bm25", "postings", split)(
+    memoStore(s, d, "graft_bm25", split)(
       (h, base, dir) => graft.sources.SearchIndex.write(h, base, dir,
         posts = Some(postingsSlice(s, d, if (split) Some(0) else None))),
       (sp, base, b) => graft.sources.SearchIndex.append(sp, base, b,
@@ -536,7 +526,7 @@ object SearchPack extends QueryPack {
 
   private def lmStore(s: SparkSession, d: String, split: Boolean)
       : String =
-    memoStore(s, d, "graft_lm", "uni", split)(
+    memoStore(s, d, "graft_lm", split)(
       (h, base, dir) => graft.sources.LmStore.write(h, base, dir,
         stats = Some(lmStats(s, d, if (split) Some(0) else None))),
       (sp, base, b) => graft.sources.LmStore.append(sp, base, b,

@@ -175,19 +175,16 @@ object SimHashPack extends QueryPack {
       ORDER BY doc_a, doc_b
       """))
 
-  /** Build (once per JVM × dataset × path-shape, [[StoreMemo]]
-    * discipline) the C15 gate's history store: even doc_ids.
+  /** Build (once per JVM × dataset × path-shape, [[graft.Caches.store]])
+    * the C15 gate's history store: even doc_ids.
     * `split = true` writes the doc_id % 4 == 0 slice and APPENDS the
     * % 4 == 2 slice — the probe must be identical either way, which is
     * the append contract the second gate row proves.
     */
   private def simStore(s: SparkSession, d: String,
-      split: Boolean): String = {
-    import graft.sources.StoreMemo
-    val table = s"graft_sh_store_${StoreMemo.tagOf(d)}" +
-      (if (split) "a" else "")
-    val dir = s"${StoreMemo.root}/$table"
-    StoreMemo.once(s, table, dir, Seq(table)) {
+      split: Boolean): String =
+    graft.Caches.store(s, d, "graft_sh_store_%s" + (if (split) "a" else ""))(
+        Seq(_)) { (table, dir) =>
       val hist = Tables.parallelized(Tables.documents(s, d))
         .filter(pmod(col("doc_id"), lit(2)) === 0)
         .select(col("doc_id"), col("text"))
@@ -199,8 +196,6 @@ object SimHashPack extends QueryPack {
           hist.filter(pmod(col("doc_id"), lit(4)) === 2))
       }
     }
-    table
-  }
 
   private def oddBatch(s: SparkSession, d: String): DataFrame =
     Tables.parallelized(Tables.documents(s, d))

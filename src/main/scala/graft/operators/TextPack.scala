@@ -713,21 +713,17 @@ object TextPack extends QueryPack {
       """
 
   // ---- E8b: the persisted tokenizer, through the driver gate ----
-  // Train once per (JVM, dataset) via the StoreMemo discipline, then
+  // Train once per (JVM, dataset) through Caches.store, then
   // encode the corpus with the STORED merge table — bpe_encode's
   // oracle VERBATIM (the frozen-tokenizer serving contract).
   private def bpeStoreOf(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_bpe_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_merges", dir, Seq(s"${base}_merges")) {
+      d: String): String =
+    graft.Caches.store(s, d, "graft_bpe_store_%s")(
+        b => Seq(s"${b}_merges")) { (base, dir) =>
       graft.sources.BpeStore.write(
         Tables.parallelized(Tables.documents(s, d))
           .select(col("doc_id"), col("text")), base, dir)
     }
-    base
-  }
 
   private val bpeStoreEncode = GraftQuery(
     "bpe_store_encode",

@@ -286,12 +286,9 @@ object TimeSeriesPack extends QueryPack {
   // result must hash-match the SAME oracle as the in-query
   // metrics_kmv, which is the "estimate-after-append ≡ one global
   // pass" contract a monitoring dashboard relies on.
-  private def kmvStore(s: SparkSession, d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_kmv_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_kmv", dir,
-        Seq(s"${base}_kmv", s"${base}_meta")) {
+  private def kmvStore(s: SparkSession, d: String): String =
+    graft.Caches.store(s, d, "graft_kmv_store_%s")(
+        b => Seq(s"${b}_kmv", s"${b}_meta")) { (base, dir) =>
       val ev = Tables.events(s, d)
       graft.sources.MetricsStore.write(
         ev.filter(pmod(col("event_id"), lit(2)) === 0),
@@ -301,8 +298,6 @@ object TimeSeriesPack extends QueryPack {
         ev.filter(pmod(col("event_id"), lit(2)) =!= 0),
         col("event_type"), col("ts"), col("user_id"))
     }
-    base
-  }
 
   private val kmvStoreEstimate = GraftQuery(
     "kmv_store_estimate",
@@ -439,11 +434,9 @@ object TimeSeriesPack extends QueryPack {
   // sums are partition-shape-independent), read the merged cells — and
   // the result must hash-match the SAME oracle as the in-query
   // metrics_cms, the cells-after-append ≡ one-global-pass contract.
-  private def cmsStore(s: SparkSession, d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_cms_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_cms", dir, Seq(s"${base}_cms")) {
+  private def cmsStore(s: SparkSession, d: String): String =
+    graft.Caches.store(s, d, "graft_cms_store_%s")(
+        b => Seq(s"${b}_cms")) { (base, dir) =>
       val ev = Tables.events(s, d)
       graft.sources.MetricsStore.writeCms(
         ev.filter(pmod(col("event_id"), lit(2)) === 0),
@@ -452,8 +445,6 @@ object TimeSeriesPack extends QueryPack {
         ev.filter(pmod(col("event_id"), lit(2)) =!= 0),
         col("ts"), col("user_id"))
     }
-    base
-  }
 
   private val cmsStoreEstimate = GraftQuery(
     "cms_store_estimate",
@@ -1190,19 +1181,15 @@ object TimeSeriesPack extends QueryPack {
   // event_ids, APPEND the odds, read the folded snapshot — must
   // hash-match the SAME oracle as the in-query q_latest (max is
   // associative, counts additive over disjoint slices).
-  private def latestStore(s: SparkSession, d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_latest_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_latest", dir, Seq(s"${base}_latest")) {
+  private def latestStore(s: SparkSession, d: String): String =
+    graft.Caches.store(s, d, "graft_latest_store_%s")(
+        b => Seq(s"${b}_latest")) { (base, dir) =>
       val ev = Tables.events(s, d)
       graft.sources.SnapshotStore.write(
         ev.filter(pmod(col("event_id"), lit(2)) === 0), base, dir)
       graft.sources.SnapshotStore.append(s, base,
         ev.filter(pmod(col("event_id"), lit(2)) =!= 0))
     }
-    base
-  }
 
   private val latestStoreSnapshot = GraftQuery(
     "latest_store_snapshot",
@@ -1359,11 +1346,9 @@ object TimeSeriesPack extends QueryPack {
   // the merged cells up to quantile brackets — and the result must
   // hash-match the SAME oracle as the in-query metrics_hist_rollup:
   // brackets-after-append ≡ one-global-pass bit-for-bit.
-  private def histStore(s: SparkSession, d: String): String = {
-    import graft.sources.StoreMemo
-    val base = s"graft_hist_store_${StoreMemo.tagOf(d)}"
-    val dir = s"${StoreMemo.root}/$base"
-    StoreMemo.once(s, s"${base}_hist", dir, Seq(s"${base}_hist")) {
+  private def histStore(s: SparkSession, d: String): String =
+    graft.Caches.store(s, d, "graft_hist_store_%s")(
+        b => Seq(s"${b}_hist")) { (base, dir) =>
       val ev = Tables.events(s, d)
       graft.sources.MetricsStore.writeHist(
         ev.filter(pmod(col("event_id"), lit(2)) === 0),
@@ -1372,8 +1357,6 @@ object TimeSeriesPack extends QueryPack {
         ev.filter(pmod(col("event_id"), lit(2)) =!= 0),
         col("event_type"), col("ts"), col("value"))
     }
-    base
-  }
 
   private val histStoreRollup = GraftQuery(
     "hist_store_rollup",

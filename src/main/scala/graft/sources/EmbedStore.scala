@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.functions.Vectors
-import graft.operators.AnnPack
+import graft.operators.{AnnPack, DedupPack}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -144,24 +144,8 @@ object EmbedStore {
       // (duplicates carry identical cos_sim) keeps n_hist_matches a
       // count of distinct history VECTORS
       .dropDuplicates("vec_id", "h_id")
-    verdictsOf(batch, verified)
-  }
-
-  /** The verdict row per batch vector off its verified (vec_id, h_id,
-    * cos_sim) pairs: (vec_id, n_hist_matches, hist_canonical, best_cos)
-    * — the match count, the smallest matching history id and the best
-    * cosine, or the 0 / -1 / 0.0 sentinels when no pair cleared τ.
-    * Shared by both legs, so their verdict rows cannot drift apart.
-    */
-  private def verdictsOf(batch: DataFrame, verified: DataFrame): DataFrame = {
-    val verdicts = verified.groupBy(col("vec_id"))
-      .agg(count(lit(1)).as("__n"), min(col("h_id")).as("__hist"),
-        max(col("cos_sim")).as("__best"))
-    batch.select(col("vec_id")).join(verdicts, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("__n"), lit(0L)).as("n_hist_matches"),
-        coalesce(col("__hist"), lit(-1L)).as("hist_canonical"),
-        coalesce(col("__best"), lit(0.0)).as("best_cos"))
+    DedupPack.verdictsOf(batch, verified,
+      "vec_id", max(col("cos_sim")), "best_cos", 0.0)
   }
 
   // ---- the BANDED leg (r13): hyperplane-sign band keys persisted
@@ -426,7 +410,8 @@ object EmbedStore {
       .withColumn("cos_sim",
         Vectors.cosine(col("qv"), col("hv"), col("qn"), col("hnrm")))
       .filter(col("cos_sim") >= tau)
-    verdictsOf(batch, verified)
+    DedupPack.verdictsOf(batch, verified,
+      "vec_id", max(col("cos_sim")), "best_cos", 0.0)
   }
 
   /** PER-LABEL routed probe (r14 — the r13 verdict's task 1, store

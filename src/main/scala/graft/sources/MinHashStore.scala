@@ -245,14 +245,7 @@ object MinHashStore {
       // duplicate rows carry identical jaccard) keeps n_hist_matches a
       // count of distinct history DOCS, so replay cannot change verdicts
       .dropDuplicates("doc_id", "h_id")
-    val verdicts = verified.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("__n"), min(col("h_id")).as("__hist"),
-        max(col("jaccard")).as("__best"))
-    batch.select(col("doc_id"))
-      .join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("__n"), lit(0L)).as("n_hist_matches"),
-        coalesce(col("__hist"), lit(-1L)).as("hist_canonical"),
-        coalesce(col("__best"), lit(0.0)).as("best_jaccard"))
+    DedupPack.verdictsOf(batch, verified,
+      "doc_id", max(col("jaccard")), "best_jaccard", 0.0)
   }
 }

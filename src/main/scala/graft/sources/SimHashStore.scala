@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.SimHashPack
+import graft.operators.{DedupPack, SimHashPack}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -147,14 +147,7 @@ object SimHashStore {
       .withColumn("hamming",
         expr("graft_hamming(sig_a, sig)").cast(LongType))
       .filter(col("hamming") <= SimHashPack.maxHamming)
-    val verdicts = cand.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("__n"), min(col("h_id")).as("__hist"),
-        min(col("hamming")).as("__best"))
-    batch.select(col("doc_id"))
-      .join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("__n"), lit(0L)).as("n_hist_matches"),
-        coalesce(col("__hist"), lit(-1L)).as("hist_canonical"),
-        coalesce(col("__best"), lit(64L)).as("best_hamming"))
+    DedupPack.verdictsOf(batch, cand,
+      "doc_id", min(col("hamming")), "best_hamming", 64L)
   }
 }
