@@ -638,10 +638,11 @@ class DedupPackSpec extends GraftSpec {
   }
 
   test("incremental store memo resets with Caches.releaseAll — no stale-history probe after a dataset rewrite") {
-    // The C11/C12 memo key is catalog-table existence; releaseAll must
-    // clear it like every other dataset-keyed artifact (persisted
-    // frames, ann index dirs, ccMemo), or a dataset dir rewritten
-    // in-session would be probed against the STALE history store.
+    // The C11/C12 stores are memoized in a Caches.once cell (through
+    // Caches.store); releaseAll must forget that cell and drop the
+    // stores' tables like every other dataset-keyed artifact, or a
+    // dataset dir rewritten in-session would be probed against the
+    // STALE history store.
     SparkEntry.queries("dedup_incremental")(spark, sfDir).count()
     SparkEntry.queries("dedup_incremental_minhash")(spark, sfDir).count()
     val tag = java.security.MessageDigest.getInstance("MD5")

@@ -134,6 +134,46 @@ class StreamingSpec extends GraftSpec {
     assert(!staging.exists() || staging.listFiles().isEmpty)
   }
 
+  test("store commit path starts no process: no Hadoop Shell fork in the stream, its checkpoint or commitBatch") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-stream-nofork").toString
+    val out = Files.createTempDirectory("graft-tsdb-nofork").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-nofork").toString
+    val lines = CloudFrontPack.synthLines(Tables.events(spark, sfDir))
+      .limit(300)
+    lines.repartition(3).write.mode("overwrite").text(dir) // three files
+    val records = graft.cloudfront.CloudFrontLogs.toRecords(
+        CloudFrontStream.parsed(lines).drop("event_time"),
+        Seq("sc_bytes"), Seq("x_edge_location"))
+      .withColumn("day", to_date(col("time")))
+    val jfr = Files.createTempFile("graft-forks", ".jfr")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.setDestination(jfr)
+    rec.start()
+    try {
+      val stream = spark.readStream.schema("value STRING")
+        .option("maxFilesPerTrigger", 1).text(dir)
+        .withColumnRenamed("value", "line")
+      val q = CloudFrontStream.toTimestreamStore(stream, s"$out/stream", ckpt)
+      try q.processAllAvailable() finally q.stop()
+      CloudFrontStream.commitBatch(records, s"$out/direct", "t", 0)
+      CloudFrontStream.commitBatch(records, s"$out/direct", "t", 1)
+    } finally rec.stop() // writes the recording to `jfr`
+    rec.close()
+    val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+    val shell = starts.filter(e => Option(e.getStackTrace).exists(
+      _.getFrames.asScala.exists(
+        _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell"))))
+    assert(shell.isEmpty, s"${shell.size} of ${starts.size} process starts " +
+      s"came from Hadoop's Shell, e.g. " +
+      shell.take(3).map(_.getString("command")).mkString("; "))
+    // both measures of 300 lines; one measure of 300 lines, twice
+    assert(spark.read.parquet(s"$out/stream").count() == 600)
+    assert(spark.read.parquet(s"$out/direct").count() == 600)
+  }
+
   test("cf_stream top-k: windowed uri counts rank to the batch answer") {
     val dir = Files.createTempDirectory("graft-stream-t").toString
     writeLines(dir)
